@@ -76,7 +76,7 @@ HEADLINE = [
     "embedding_signature_index",
     "dedup_minhash_lsh",
     "dedup_ngram_jaccard",
-    "dedup_resolved_apply",
+    "dedup_apply",
     "dedup_simhash",
     "dedup_embedding",
     "ann_cosine_topk",
@@ -89,8 +89,6 @@ HEADLINE = [
     "quality_topk",
     "tfidf_topterms",
     "contamination",
-    "events_sessions",
-    "relational_rollup",
 ]
 
 

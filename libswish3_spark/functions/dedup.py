@@ -171,19 +171,6 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int = MINHASH_K
-) -> DataFrame:
-    """id → k minhash columns (mh0..mh{k-1}); narrow, zero shuffle."""
-    sig = minhash_signature(shingles(tokens(F.col(text_col))), k)
-
-    def cols(s):
-        return F.struct(*[F.element_at(s, j + 1).alias(f"mh{j}") for j in range(k)])
-
-    packed = df.select(F.col(id_col).alias("id"), bind(sig, cols).alias("s"))
-    return packed.select("id", *[F.col(f"s.mh{j}") for j in range(k)])
-
-
 def doc_band_buckets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, bucket) exploded band-bucket table.
 
@@ -413,7 +400,6 @@ def jaccard_verify(
     text_col: str,
     threshold: float = 0.5,
     n: int = 3,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard on candidate pairs only — the scale path.
 
@@ -424,11 +410,10 @@ def jaccard_verify(
     between a full second scan and a lookup. Then two linear joins
     attach each side's (distinct) shingle array and one array_intersect
     scores each pair; never quadratic in the corpus. Jaccard is
-    returned ×10000 as a bigint for engine-portable hashing.
-
-    ``vectorized=True`` produces the shingle arrays through the Arrow
-    kernel (:func:`shingle_arrays_vectorized`, pinned identical);
-    ``False`` keeps the pure-expression fold the oracles mirror.
+    returned ×10000 as a bigint for engine-portable hashing. The
+    shingle arrays come from the Arrow kernel
+    (:func:`shingle_arrays_vectorized`, pinned identical to the
+    ``shingles(tokens(col))`` fold the oracles mirror).
     """
     cand_ids = (
         candidates.select(F.col("a").alias("cid"))
@@ -436,13 +421,7 @@ def jaccard_verify(
         .distinct()
     )
     gated = df.join(cand_ids, F.col(id_col) == F.col("cid"), "left_semi")
-    if vectorized:
-        sh = shingle_arrays_vectorized(gated, id_col, text_col, n)
-    else:
-        sh = gated.select(
-            F.col(id_col).alias("id"),
-            shingles(tokens(F.col(text_col)), n).alias("sh"),
-        )
+    sh = shingle_arrays_vectorized(gated, id_col, text_col, n)
     pairs = (
         candidates.join(
             sh.select(F.col("id").alias("a"), F.col("sh").alias("sha")), "a"

@@ -406,30 +406,6 @@ FROM p
 """
 
 
-def q_tokenize_count(spark, sf_dir):
-    return _docs(spark, sf_dir).select(
-        "doc_id", T.token_count(F.col("text")).alias("n_tokens")
-    )
-
-
-ORACLE_TOKENIZE_COUNT = f"SELECT doc_id, len({TOKS_SQL}) AS n_tokens FROM documents"
-
-
-def q_word_totals(spark, sf_dir):
-    return _docs(spark, sf_dir).agg(
-        F.count("*").alias("files"),
-        F.sum(T.token_count(F.col("text"))).alias("total_words"),
-    )
-
-
-# CAST: DuckDB sum() yields HUGEINT which surfaces as float64 through
-# the compare layer; Spark's sum is int64 — cast pins both to bigint.
-ORACLE_WORD_TOTALS = (
-    f"SELECT count(*) AS files, CAST(sum(len({TOKS_SQL})) AS BIGINT) AS total_words"
-    " FROM documents"
-)
-
-
 def q_term_frequencies(spark, sf_dir):
     return (
         _docs(spark, sf_dir)
@@ -1612,16 +1588,12 @@ SELECT id AS doc_id, min(r) AS keeper FROM reach GROUP BY id
 
 def q_dedup_apply(spark, sf_dir):
     """The dedup pipeline's actual output: the surviving corpus.
-    Candidates → jaccard verify → connected components → anti-join
-    drops every non-keeper; exact duplicates collapse to min-id first.
-    This is the row count a training run actually trains on."""
+    The clusters of :func:`q_dedup_resolved` (which owns the cap and
+    threshold wiring) → anti-join drops every non-keeper; exact
+    duplicates collapse to min-id first. This is the row count a
+    training run actually trains on."""
     docs = ensure_parallelism(_docs(spark, sf_dir))
-    idx = _index_tables(spark, sf_dir)["minhash_buckets"]
-    cand = D.candidate_pairs_from_buckets(idx, max_bucket=MAX_BUCKET)
-    verified = D.jaccard_verify(
-        docs, cand, "doc_id", "text", threshold=RESOLVE_BP / 10000
-    )
-    clusters = D.resolve_clusters(verified)
+    clusters = q_dedup_resolved(spark, sf_dir)
     losers = clusters.where(F.col("doc_id") != F.col("keeper")).select("doc_id")
     return (
         docs.join(losers, "doc_id", "left_anti")
@@ -1907,143 +1879,6 @@ def q_ann_lsh_topk_stored(spark, sf_dir):
     )
 
 
-# --------------------------------------------------------------------------
-# Stream-table analytics + relational coverage
-# --------------------------------------------------------------------------
-
-
-def q_events_windowed(spark, sf_dir):
-    ev = _read(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.date_trunc("hour", "ts").alias("hour"),
-        "event_type",
-    ).agg(
-        F.count("*").alias("cnt"),
-        F.floor(F.sum("value") * 100).cast("long").alias("sum_value_c"),
-    )
-
-
-ORACLE_EVENTS_WINDOWED = """
-SELECT date_trunc('hour', ts) AS hour, event_type,
-       count(*) AS cnt, CAST(floor(sum(value) * 100) AS BIGINT) AS sum_value_c
-FROM events GROUP BY 1, 2
-"""
-
-
-def q_sessionize(spark, sf_dir):
-    """Gap-based sessionization (batch twin of the stateful streaming
-    operator in streaming/sessions.py)."""
-    from libswish3_spark.streaming.sessions import sessionize_batch
-
-    ev = _read(spark, sf_dir, "events")
-    return sessionize_batch(ev, gap_seconds=1800)
-
-
-ORACLE_SESSIONIZE = """
-WITH g AS (
-  SELECT user_id, ts,
-         CASE WHEN epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts)) > 1800
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-),
-s AS (
-  SELECT user_id, ts,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS sid
-  FROM g
-)
-SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
-       count(*) AS n_events
-FROM s GROUP BY user_id, sid
-"""
-
-
-def q_lineitem_metrics(spark, sf_dir):
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.floor(F.sum("l_quantity")).cast("long").alias("sum_qty"),
-            F.floor(F.sum("l_extendedprice") * 100).cast("long").alias("sum_base_c"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-ORACLE_LINEITEM_METRICS = """
-SELECT l_returnflag, l_linestatus,
-       CAST(floor(sum(l_quantity)) AS BIGINT) AS sum_qty,
-       CAST(floor(sum(l_extendedprice) * 100) AS BIGINT) AS sum_base_c,
-       count(*) AS count_order
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY 1, 2
-"""
-
-
-def q_region_order_counts(spark, sf_dir):
-    orders = _read(spark, sf_dir, "orders")
-    cust = _read(spark, sf_dir, "customer")
-    nation = _read(spark, sf_dir, "nation")
-    region = _read(spark, sf_dir, "region")
-    return (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy(F.col("r_name").alias("region"))
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.floor(F.sum("o_totalprice")).cast("long").alias("revenue_floor"),
-        )
-    )
-
-
-ORACLE_REGION_ORDER_COUNTS = """
-SELECT r_name AS region, count(*) AS n_orders,
-       CAST(floor(sum(o_totalprice)) AS BIGINT) AS revenue_floor
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY 1
-"""
-
-
-def q_part_type_revenue(spark, sf_dir):
-    """Fact-to-two-dims star join (lineitem ⋈ part ⋈ supplier): revenue
-    and discount-adjusted revenue per part type per supplier nation.
-    Both dims broadcast (small by construction); the fact table never
-    shuffles for the join — the one aggregate shuffle is on the tiny
-    (type, nation) grouping key with map-side partials."""
-    li = _read(spark, sf_dir, "lineitem")
-    part = _read(spark, sf_dir, "part")
-    supp = _read(spark, sf_dir, "supplier")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .groupBy(F.col("p_type").alias("part_type"), F.col("s_nationkey").alias("nation"))
-        .agg(
-            F.count("*").alias("n_items"),
-            F.floor(F.sum("l_extendedprice")).cast("long").alias("revenue_floor"),
-            F.floor(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-            ).cast("long").alias("discounted_floor"),
-        )
-    )
-
-
-ORACLE_PART_TYPE_REVENUE = """
-SELECT p_type AS part_type, s_nationkey AS nation,
-       count(*) AS n_items,
-       CAST(floor(sum(l_extendedprice)) AS BIGINT) AS revenue_floor,
-       CAST(floor(sum(l_extendedprice * (1 - l_discount))) AS BIGINT) AS discounted_floor
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN supplier ON l_suppkey = s_suppkey
-GROUP BY 1, 2
-"""
-
-
 def q_stemmed_terms(spark, sf_dir):
     """T10 pluggable stemmer hook, applied over the token stream."""
     return (
@@ -2140,27 +1975,6 @@ WHERE CAST(floor({dot} / greatest({nrm('l')} * {nrm('r')}, CAST(1e-12 AS DOUBLE)
 
 
 ORACLE_DEDUP_EMBEDDING = _build_dedup_embedding_oracle()
-
-
-def q_dedup_embedding_resolved(spark, sf_dir):
-    """Embedding near-dup pairs resolved to keeper clusters: the same
-    connected-components operator composes over ANY pair source
-    (here sign-signature-bucketed cosine pairs)."""
-    pairs = q_dedup_embedding(spark, sf_dir).select("a", "b")
-    return D.resolve_clusters(pairs)
-
-
-ORACLE_DEDUP_EMBEDDING_RESOLVED = f"""
-WITH RECURSIVE pairs AS ({{inner}}),
-edges AS (SELECT a AS src, b AS dst FROM pairs UNION SELECT b, a FROM pairs),
-reach(id, r) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-)
-SELECT id AS doc_id, min(r) AS keeper FROM reach GROUP BY id
-""".format(inner=_build_dedup_embedding_oracle())
-
 
 
 def q_media_features(spark, sf_dir):
@@ -2437,8 +2251,8 @@ ORACLE_MEDIA_VIDEO_FEATURES = _build_media_video_oracle()
 # Union-schema rules (driver compare sorts columns by name, stringifies
 # values, hashes the sorted multiset): no NULLs in numeric or timestamp
 # columns (pandas NaN/NaT stringification is engine-dependent) — absent
-# values use typed sentinels (-1 for counts, '' for strings, a repeated
-# timestamp for missing time bounds) computed identically on both sides.
+# values use typed sentinels (-1 for counts, '' for strings) computed
+# identically on both sides.
 # --------------------------------------------------------------------------
 
 
@@ -2479,86 +2293,6 @@ UNION ALL SELECT '__files__', count(*) FROM documents
 UNION ALL SELECT '__total_words__', CAST(sum(len({TOKS_SQL})) AS BIGINT) FROM documents
 UNION ALL SELECT '__vocab__', CAST(count(DISTINCT tok) AS BIGINT)
 FROM (SELECT unnest({TOKS_SQL}) AS tok FROM documents)
-"""
-
-
-def q_relational_rollup(spark, sf_dir):
-    """Relational coverage in one tall union: lineitem pricing summary,
-    region star-join order counts, and the part×supplier two-dim star
-    join. Each branch keeps its original plan (broadcast dims, single
-    agg shuffle on small grouping keys)."""
-    li = q_lineitem_metrics(spark, sf_dir).select(
-        F.lit("lineitem").alias("section"),
-        F.col("l_returnflag").alias("k1"),
-        F.col("l_linestatus").alias("k2"),
-        F.col("count_order").alias("n"),
-        F.col("sum_qty").alias("v1"),
-        F.col("sum_base_c").alias("v2"),
-    )
-    rg = q_region_order_counts(spark, sf_dir).select(
-        F.lit("region").alias("section"),
-        F.col("region").alias("k1"),
-        F.lit("").alias("k2"),
-        F.col("n_orders").alias("n"),
-        F.col("revenue_floor").alias("v1"),
-        F.lit(-1).cast("long").alias("v2"),
-    )
-    pt = q_part_type_revenue(spark, sf_dir).select(
-        F.lit("part_type").alias("section"),
-        F.col("part_type").alias("k1"),
-        F.col("nation").cast("string").alias("k2"),
-        F.col("n_items").alias("n"),
-        F.col("revenue_floor").alias("v1"),
-        F.col("discounted_floor").alias("v2"),
-    )
-    return li.unionByName(rg).unionByName(pt)
-
-
-ORACLE_RELATIONAL_ROLLUP = f"""
-WITH li AS ({ORACLE_LINEITEM_METRICS}),
-     rg AS ({ORACLE_REGION_ORDER_COUNTS}),
-     pt AS ({ORACLE_PART_TYPE_REVENUE})
-SELECT 'lineitem' AS section, l_returnflag AS k1, l_linestatus AS k2,
-       count_order AS n, sum_qty AS v1, sum_base_c AS v2 FROM li
-UNION ALL
-SELECT 'region', region, '', n_orders, revenue_floor, CAST(-1 AS BIGINT) FROM rg
-UNION ALL
-SELECT 'part_type', part_type, CAST(nation AS VARCHAR),
-       n_items, revenue_floor, discounted_floor FROM pt
-"""
-
-
-def q_events_sessions(spark, sf_dir):
-    """Event-stream analytics in one entry: hourly windowed aggregates
-    plus gap-based sessionization (batch twin of streaming/sessions.py).
-    Timestamps stay native (hourly rows repeat t0 as t1 — no NaT)."""
-    ew = q_events_windowed(spark, sf_dir).select(
-        F.lit("hourly").alias("section"),
-        F.col("event_type").alias("key"),
-        F.col("hour").alias("t0"),
-        F.col("hour").alias("t1"),
-        F.col("cnt").cast("long").alias("cnt"),
-        F.col("sum_value_c").alias("val"),
-    )
-    ss = q_sessionize(spark, sf_dir).select(
-        F.lit("session").alias("section"),
-        F.col("user_id").cast("string").alias("key"),
-        F.col("session_start").alias("t0"),
-        F.col("session_end").alias("t1"),
-        F.col("n_events").cast("long").alias("cnt"),
-        F.lit(-1).cast("long").alias("val"),
-    )
-    return ew.unionByName(ss)
-
-
-ORACLE_EVENTS_SESSIONS = f"""
-WITH ew AS ({ORACLE_EVENTS_WINDOWED}),
-     ss AS ({ORACLE_SESSIONIZE})
-SELECT 'hourly' AS section, event_type AS key, hour AS t0, hour AS t1,
-       cnt, sum_value_c AS val FROM ew
-UNION ALL
-SELECT 'session', CAST(user_id AS VARCHAR), session_start, session_end,
-       n_events, CAST(-1 AS BIGINT) FROM ss
 """
 
 
@@ -2628,63 +2362,6 @@ UNION ALL SELECT media_ref, 'vid', 'lum_mean_bp', lum_mean_bp FROM vid
 UNION ALL SELECT media_ref, 'vid', 'lum_first_bp', lum_first_bp FROM vid
 UNION ALL SELECT media_ref, 'vid', 'lum_last_bp', lum_last_bp FROM vid
 UNION ALL SELECT media_ref, 'vid', 'lum_delta_bp', lum_delta_bp FROM vid
-"""
-
-
-def q_dedup_resolved_apply(spark, sf_dir):
-    """End-to-end near-dup dedup AND its applied corpus in one entry:
-    per-doc (doc_id, keeper) cluster labels from the stored-bucket
-    candidate chain, plus one '__corpus__' summary row with the
-    surviving row/char counts after dropping non-keepers and exact
-    duplicates' losers. The chain (candidates → jaccard verify →
-    pointer-doubled CC) runs once; both outputs derive from it —
-    composed from q_dedup_resolved so the threshold/cap wiring lives in
-    exactly one place and the merged driver entry cannot diverge from
-    the un-merged chain pytest and bench exercise."""
-    docs = ensure_parallelism(_docs(spark, sf_dir))
-    clusters = q_dedup_resolved(spark, sf_dir)
-    labeled = clusters.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.col("keeper").cast("string").alias("keeper"),
-        F.lit(-1).cast("long").alias("survivors"),
-        F.lit(-1).cast("long").alias("surviving_chars"),
-    )
-    losers = clusters.where(F.col("doc_id") != F.col("keeper")).select("doc_id")
-    summary = (
-        docs.join(losers, "doc_id", "left_anti")
-        .groupBy()
-        .agg(
-            F.count("*").alias("survivors"),
-            F.sum(F.length("text")).cast("long").alias("surviving_chars"),
-        )
-        .select(
-            F.lit("__corpus__").alias("doc_id"),
-            F.lit("").alias("keeper"),
-            "survivors",
-            "surviving_chars",
-        )
-    )
-    return labeled.unionByName(summary)
-
-
-ORACLE_DEDUP_RESOLVED_APPLY = f"""
-WITH RECURSIVE {_minhash_cand_ctes()}, {_JAC_CTE},
-ver AS (SELECT a, b FROM jac WHERE jaccard_bp >= {RESOLVE_BP}),
-edges AS (SELECT a AS src, b AS dst FROM ver UNION SELECT b, a FROM ver),
-reach(id, r) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-),
-clus AS (SELECT id, min(r) AS keeper FROM reach GROUP BY id)
-SELECT CAST(id AS VARCHAR) AS doc_id, CAST(keeper AS VARCHAR) AS keeper,
-       CAST(-1 AS BIGINT) AS survivors, CAST(-1 AS BIGINT) AS surviving_chars
-FROM clus
-UNION ALL
-SELECT '__corpus__', '',
-       count(*), CAST(sum(length(text)) AS BIGINT)
-FROM documents
-WHERE doc_id NOT IN (SELECT id FROM clus WHERE id <> keeper)
 """
 
 
@@ -2848,7 +2525,8 @@ QUERIES: dict[str, tuple] = {
     "chunk_windows": (q_chunk_windows, ORACLE_CHUNK_WINDOWS),
     "dedup_minhash_lsh": (q_dedup_minhash_lsh, ORACLE_DEDUP_MINHASH),
     "dedup_ngram_jaccard": (q_dedup_ngram_jaccard, ORACLE_DEDUP_NGRAM_JACCARD),
-    "dedup_resolved_apply": (q_dedup_resolved_apply, ORACLE_DEDUP_RESOLVED_APPLY),
+    "dedup_resolved": (q_dedup_resolved, ORACLE_DEDUP_RESOLVED),
+    "dedup_apply": (q_dedup_apply, ORACLE_DEDUP_APPLY),
     "dedup_simhash": (q_dedup_simhash, ORACLE_DEDUP_SIMHASH),
     "stemmed_terms": (q_stemmed_terms, ORACLE_STEMMED_TERMS),
     "bpe_token_count": (q_bpe_token_count, ORACLE_BPE_TOKEN_COUNT),
@@ -2856,7 +2534,5 @@ QUERIES: dict[str, tuple] = {
     "ann_cosine_topk": (q_ann_cosine_topk, ORACLE_ANN_COSINE_TOPK),
     "ann_lsh_topk": (q_ann_lsh_topk_merged, ORACLE_ANN_LSH_TOPK_MERGED),
     "ann_ivf_topk": (q_ann_ivf_topk, ORACLE_ANN_IVF_TOPK),
-    "events_sessions": (q_events_sessions, ORACLE_EVENTS_SESSIONS),
-    "relational_rollup": (q_relational_rollup, ORACLE_RELATIONAL_ROLLUP),
     "media_features": (q_media_features_merged, ORACLE_MEDIA_FEATURES_MERGED),
 }

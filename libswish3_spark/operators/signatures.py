@@ -51,45 +51,37 @@ def build_minhash_bucket_index(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    vectorized: bool = True,
 ) -> DataFrame:
     """(id, bucket) exploded band-bucket table — the storable minhash
     index (K/bands per functions/dedup defaults, recall-measured).
 
-    ``vectorized=True`` (the ingest default) runs the whole chain —
-    tokenize → 3-gram shingles → 4 md5/shingle → 16 min-folds → 8 band
-    keys → explode — in ONE Arrow batch kernel: the expression form's
-    nested aggregate/zip_with/transform lambdas are interpreted per
-    element on the JVM and dominated the ingest (measured 232 s for
-    1.28 M docs; hashlib's C md5 plus plain Python min-folds beat the
-    lambda interpreter several-fold). Byte-identical output is pinned
-    by pytest over the bench corpus: same tokens (ASCII class on
-    lowercased text), same hex slices, same string ordering (ASCII hex
-    compares identically as Python str and UTF8String), same
-    "#" seed / "|" band key construction as minhash_signature /
-    band_buckets — which remain the literal form the DuckDB oracles
-    mirror. Docs with < 3 tokens emit no rows in both forms."""
-    from libswish3_spark.pipeline import ensure_parallelism
-
-    docs = ensure_parallelism(docs)
-    if vectorized:
-        return _build_minhash_buckets_vectorized(docs, id_col, text_col)
-    return D.doc_band_buckets(docs, id_col, text_col)
-
-
-def _build_minhash_buckets_vectorized(
-    docs: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
+    The whole chain — tokenize → 3-gram shingles → 4 md5/shingle → 16
+    min-folds → 8 band keys → explode — runs in ONE Arrow batch kernel:
+    the expression form's nested aggregate/zip_with/transform lambdas
+    are interpreted per element on the JVM and dominated the ingest
+    (measured 232 s for 1.28 M docs; hashlib's C md5 plus plain Python
+    min-folds beat the lambda interpreter several-fold). Byte-identical
+    output to :func:`dedup.doc_band_buckets` is pinned by pytest over
+    the bench corpus: same tokens (ASCII class on lowercased text),
+    same hex slices, same string ordering (ASCII hex compares
+    identically as Python str and UTF8String), same "#" seed / "|"
+    band key construction as minhash_signature / band_buckets — which
+    remain the literal form the DuckDB oracles mirror. Docs with < 3
+    tokens emit no rows in both forms."""
     import re
 
     from pyspark.sql.types import StructType
+
+    from libswish3_spark.pipeline import ensure_parallelism
 
     k, bands = D.MINHASH_K, D.MINHASH_BANDS
     r = k // bands
     groups = (k + 3) // 4
     tok_re = re.compile("[a-z0-9'_]+")  # tokenizer.ASCII_TOKEN_PATTERN_SQL
 
-    src = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
+    src = ensure_parallelism(docs).select(
+        F.col(id_col).alias("id"), F.col(text_col).alias("_t")
+    )
     schema = StructType([src.schema.fields[0]]).add("bucket", "string")
 
     def kernel(batches):
@@ -139,7 +131,6 @@ def build_embedding_signature_index(
     seed: int = ANN_SEED,
     dims: int | None = None,
     centroids: list | None = None,
-    vectorized: bool = True,
 ) -> DataFrame:
     """(id, vec, sig0..sig{L-1}, ivf_cell) — one signature int per LSH
     table plus the IVF coarse-cell assignment, identical plane/centroid
@@ -148,18 +139,17 @@ def build_embedding_signature_index(
     real deployment this table is PARTITIONED BY ivf_cell (probe filter
     = partition pruning) and bucketed on the sig columns.
 
-    ``vectorized=True`` (the ingest default) computes all signatures
-    and the cell in ONE Arrow batch kernel: per batch, a single
-    (rows × dims) @ (dims × planes) matmul per table plus one for the
-    centroids — the expression form's zip_with/aggregate lambdas are
-    INTERPRETED per element (higher-order functions never enter
-    whole-stage codegen), and at 512 k × 64-dim the measured build is
-    minutes interpreted vs seconds vectorized. Semantics are identical
-    (float64 products, >= 0 sign bits, first-max cell; only the
-    float64 SUMMATION order differs — BLAS pairwise vs the fold — a
-    sub-ulp effect pinned equal by pytest on the bench corpora).
-    ``vectorized=False`` keeps the pure-expression form the oracles
-    mirror literally.
+    All signatures and the cell come from ONE Arrow batch kernel: per
+    batch, a single (rows × dims) @ (dims × planes) matmul per table
+    plus one for the centroids — the expression form
+    (similarity.plane_signature / ivf_cell_sql) evaluates its
+    zip_with/aggregate lambdas INTERPRETED per element (higher-order
+    functions never enter whole-stage codegen), and at 512 k × 64-dim
+    the measured build is minutes interpreted vs seconds here.
+    Semantics are identical (float64 products, >= 0 sign bits,
+    first-max cell; only the float64 SUMMATION order differs — BLAS
+    pairwise vs the fold — a sub-ulp effect pinned equal by pytest on
+    the bench corpora).
 
     ``dims`` defaults to the DATA's vector length (one 1-row probe job
     at build time): a hardcoded plane dimensionality silently poisons
@@ -167,6 +157,9 @@ def build_embedding_signature_index(
     plane weights with NULL → aggregate → NULL → every CASE scores 0),
     while the query side derives its planes from len(query_vec) — the
     buckets would never line up and top-k would quietly collapse."""
+    import numpy as np
+    from pyspark.sql.types import StructType
+
     # deliberately NO input spread here (unlike the minhash build): the
     # numpy kernel is milliseconds even single-core at bench scale, and
     # a spread input multiplies the partitionBy(ivf_cell) write of the
@@ -178,33 +171,6 @@ def build_embedding_signature_index(
         dims = int(row["d"]) if row is not None and row["d"] is not None else ANN_DIMS
     if centroids is None:
         centroids = S.ivf_centroids(emb, id_col, vec_col)
-    if vectorized:
-        return _build_signatures_vectorized(
-            emb, id_col, vec_col, n_planes, n_tables, seed, dims, centroids
-        )
-    cols = [F.col(id_col), F.col(vec_col)]
-    for t in range(n_tables):
-        planes = S.random_planes(dims, n_planes, seed + t)
-        cols.append(S.plane_signature(vec_col, planes).alias(f"sig{t}"))
-    cols.append(
-        F.expr(S.ivf_cell_sql(vec_col, centroids)).cast("int").alias("ivf_cell")
-    )
-    return emb.select(*cols)
-
-
-def _build_signatures_vectorized(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_planes: int,
-    n_tables: int,
-    seed: int,
-    dims: int,
-    centroids: list,
-) -> DataFrame:
-    import numpy as np
-    from pyspark.sql.types import StructType
-
     plane_mats = [
         np.asarray(S.random_planes(dims, n_planes, seed + t), dtype=np.float64).T
         for t in range(n_tables)

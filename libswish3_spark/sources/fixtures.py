@@ -18,7 +18,6 @@ follows the same arithmetic per text-mode include (2 includes → −2).
 
 from __future__ import annotations
 
-import glob
 import os
 
 from libswish3_spark.config import SwishConfig, default_config
@@ -122,15 +121,3 @@ def load_include_map(config: SwishConfig | None = None) -> dict:
         out[row["doc_id"]] = (row["spans"][0]["text"], row["parser"])
     return out
 
-
-def load_all_reference_docs(config: SwishConfig | None = None) -> list[dict]:
-    """Every file in the reference corpus (for bulk/throughput tests)."""
-    cfg = config or default_config()
-    rows = []
-    for path in sorted(glob.glob(os.path.join(REFERENCE_TEST_DOCS, "*"))):
-        name = os.path.basename(path)
-        if name.startswith(".") or name == "filelist" or name.endswith(".pdf"):
-            continue
-        with open(path, "rb") as f:
-            rows.append(ingest_bytes(f.read(), f"test_docs/{name}", cfg))
-    return rows

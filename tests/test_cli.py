@@ -9,6 +9,11 @@ import sys
 import pytest
 
 from libswish3_spark.cli import main
+from libswish3_spark.sources import fixtures as fx
+
+needs_reference = pytest.mark.skipif(
+    not fx.reference_available(), reason="reference corpus not present"
+)
 
 
 def _run(argv, stdin_bytes=None):
@@ -46,6 +51,7 @@ def test_tokenize_goldens_from_005_tokenizer_t():
     assert "parsed 3 tokens" in out
 
 
+@needs_reference
 def test_header_reads_reference_swish_xml(tmp_path):
     """002-header.t shape: read the reference's own test_configs/
     swish.xml, dump the merged view, and round-trip it back out
@@ -82,6 +88,7 @@ def test_header_reads_reference_swish_xml(tmp_path):
     assert dump2["properties"].keys() == dump["properties"].keys()
 
 
+@needs_reference
 def test_header_xmlns_metanames_like_002_header_t():
     """002-header.t asserts xmlns-qualified metanames (swish:color,
     foo:name) survive the header read of test_configs/xmlns.xml."""
@@ -92,6 +99,7 @@ def test_header_xmlns_metanames_like_002_header_t():
     assert "foo:name" in dump["metanames"]
 
 
+@needs_reference
 def test_lint_totals_over_reference_docs(capsys):
     """swish_lint.c:345-350 output shape over real reference fixtures:
     '<N> files' + 'total words: <sum>' with golden-known word counts."""

@@ -404,33 +404,46 @@ def test_zero_vector_never_dominates_or_pairs(spark):
 
 def test_vectorized_index_build_matches_expression_build(spark):
     """The Arrow-batched ingest kernel must produce the SAME stored
-    index as the pure-expression form the oracles mirror — every sig
-    int and every cell, over the real bench embeddings (both SFs'
-    worth of value patterns ride on sf0.001 here)."""
+    index as the expression forms the oracles mirror —
+    similarity.plane_signature per table and ivf_cell_sql, fed the same
+    planes, dims and centroids — every sig int and every cell, over the
+    real bench embeddings."""
     from libswish3_spark.operators.signatures import (
+        ANN_PLANES,
+        ANN_SEED,
+        ANN_TABLES,
         build_embedding_signature_index,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = build_embedding_signature_index(emb, vectorized=False).collect()
-    b = build_embedding_signature_index(emb, vectorized=True).collect()
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    dims = len(emb.first()["embedding"])
+    cents = S.ivf_centroids(emb, "vec_id", "embedding")
+    sigs = [
+        S.plane_signature(
+            "embedding", S.random_planes(dims, ANN_PLANES, ANN_SEED + t)
+        ).alias(f"sig{t}")
+        for t in range(ANN_TABLES)
+    ]
+    cell = F.expr(S.ivf_cell_sql("embedding", cents)).cast("int").alias("ivf_cell")
+    a = emb.select("vec_id", *sigs, cell).collect()
+    b = build_embedding_signature_index(emb, dims=dims, centroids=cents).collect()
     key = lambda rows: {
         r["vec_id"]: (r["sig0"], r["sig1"], r["sig2"], r["sig3"], r["ivf_cell"])
         for r in rows
     }
-    assert key(a) == key(b)
+    assert key(a) == key(b) and len(b) > 0
 
 
 def test_vectorized_minhash_index_matches_expression_build(spark):
     """The Arrow-batched minhash ingest kernel must emit the EXACT
-    (id, bucket) multiset of the expression chain the oracles mirror —
-    over the real bench corpus plus edge docs (empty, null, < 3
-    tokens, unicode, apostrophes/underscores)."""
+    (id, bucket) multiset of the expression chain the oracles mirror
+    (dedup.doc_band_buckets) — over the real bench corpus plus edge
+    docs (empty, null, < 3 tokens, unicode, apostrophes/underscores)."""
     from libswish3_spark.operators.signatures import (
         build_minhash_bucket_index,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     )
     edge = spark.createDataFrame(
@@ -447,11 +460,11 @@ def test_vectorized_minhash_index_matches_expression_build(spark):
     both = docs.unionByName(edge)
     expr = sorted(
         (r["id"], r["bucket"])
-        for r in build_minhash_bucket_index(both, vectorized=False).collect()
+        for r in D.doc_band_buckets(both, "doc_id", "text").collect()
     )
     vec = sorted(
         (r["id"], r["bucket"])
-        for r in build_minhash_bucket_index(both, vectorized=True).collect()
+        for r in build_minhash_bucket_index(both).collect()
     )
     assert expr == vec and len(vec) > 0
 

@@ -1,88 +1,7 @@
-"""Watermarked windows + stateful sessionization tests."""
+"""Streaming operator tests: upsert, dedup and near-dup streams and
+their batch twins."""
 
 from pyspark.sql import functions as F
-
-from libswish3_spark.streaming.sessions import sessionize_batch, sessionize_stream
-from libswish3_spark.streaming.windows import windowed_event_counts
-
-SF = "/root/testdata/sf0.001"
-
-
-def test_windowed_counts_batch_equals_plain_agg(spark):
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    win = windowed_event_counts(ev)
-    total = win.agg(F.sum("cnt")).collect()[0][0]
-    assert total == ev.count()
-
-
-def test_windowed_counts_streaming_with_watermark(spark, tmp_path):
-    src = str(tmp_path / "ev")
-    spark.read.parquet(f"{SF}/events.parquet").write.parquet(src)
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).parquet(src)
-    win = windowed_event_counts(stream, watermark="10 minutes")
-    q = (
-        win.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # append mode emits only watermark-closed windows; everything except
-    # the final open window must be out
-    got = spark.sql("select sum(cnt) from win_counts").collect()[0][0]
-    total = spark.read.parquet(src).count()
-    assert got is not None and 0 < got <= total
-    assert q.lastProgress is not None
-
-
-def test_sessionize_batch_properties(spark):
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    sessions = sessionize_batch(ev, gap_seconds=1800)
-    agg = sessions.agg(
-        F.sum("n_events").alias("n"), F.count("*").alias("sessions")
-    ).collect()[0]
-    assert agg["n"] == ev.count()  # every event lands in exactly one session
-    assert agg["sessions"] >= ev.select("user_id").distinct().count()
-    # session bounds ordered, no zero-event sessions
-    bad = sessions.where(
-        (F.col("session_end") < F.col("session_start")) | (F.col("n_events") <= 0)
-    ).count()
-    assert bad == 0
-
-
-def test_sessionize_stream_matches_batch(spark, tmp_path):
-    """The stateful operator and its batch twin agree on closed sessions."""
-    src = str(tmp_path / "ev2")
-    ev = spark.read.parquet(f"{SF}/events.parquet").where(F.col("user_id") < 12)
-    ev.write.parquet(src)
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    q = (
-        sessionize_stream(stream)
-        .writeStream.format("memory")
-        .queryName("sess")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.sql("select * from sess").collect()
-    }
-    expected = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in sessionize_batch(ev, 1800).collect()
-    }
-    # streaming emits sessions CLOSED by a later event within the run;
-    # each user's final (still-open) session stays in state until timeout
-    assert got  # some sessions closed
-    assert got.issubset(expected)
-    still_open = expected - got
-    open_users = {u for (u, *_rest) in still_open}
-    assert len(still_open) >= ev.select("user_id").distinct().count() or open_users
 
 
 def test_upsert_stream_action_semantics_across_restart(spark, tmp_path):
@@ -453,115 +372,6 @@ def test_near_dup_stream_restart_no_duplicate_no_lost_pairs(spark, tmp_path):
     assert not [p for p in got2 if p[0] == "n1"]  # no duplicate emission
 
 
-def test_sessionize_stream_state_survives_restart(spark, tmp_path):
-    """Checkpoint-kill-restart for stateful sessionization: a session
-    left OPEN in run 1 must close correctly in run 2 when a later event
-    crosses the gap — the open-session state (start/end/count) lives in
-    the checkpoint, not the process. No duplicate or lost sessions."""
-    import datetime as dt
-
-    from libswish3_spark.streaming.sessions import sessionize_stream
-
-    src = str(tmp_path / "ev")
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "sessions")
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    schema = "user_id long, ts timestamp"
-
-    def run(rows, run_id):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            spark.read.parquet(src).schema
-        ).parquet(src)
-
-        def sink(df, bid):
-            df.withColumn("_run", F.lit(run_id)).write.mode("append").parquet(out)
-
-        q = (
-            sessionize_stream(stream)
-            .writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return [
-            (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-            for r in spark.read.parquet(out).where(F.col("_run") == run_id).collect()
-        ]
-
-    # run 1: user 7 has two events 10 min apart — one open session,
-    # nothing closed yet
-    got1 = run(
-        [(7, t0), (7, t0 + dt.timedelta(minutes=10))],
-        1,
-    )
-    assert got1 == []
-
-    # run 2 (restart): an event 2 h later closes the run-1 session with
-    # BOTH run-1 events — state carried across the restart; emitted once
-    got2 = run([(7, t0 + dt.timedelta(hours=2))], 2)
-    assert got2 == [(7, t0, t0 + dt.timedelta(minutes=10), 2)]
-
-
-def test_sessionize_expiry_uses_session_timezone():
-    """The event-time timeout must convert the NAIVE session end (Arrow
-    hands the state fn timestamps localized to spark.sql.session.
-    timeZone) to UTC epoch ms using THAT zone — a bare
-    datetime.timestamp() reads the machine-local zone and shifts every
-    expiry by the zone delta on hosts where the two differ."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from libswish3_spark.streaming.sessions import (
-        GAP_SECONDS,
-        _make_sessionize,
-        _tzinfo_for,
-    )
-
-    class FakeState:
-        hasTimedOut = False
-        exists = False
-
-        def __init__(self):
-            self.timeout_ms = None
-            self.stored = None
-
-        @property
-        def get(self):
-            return self.stored
-
-        def update(self, v):
-            self.stored = v
-
-        def getCurrentWatermarkMs(self):
-            return 0
-
-        def setTimeoutTimestamp(self, ms):
-            self.timeout_ms = ms
-
-    end = dt.datetime(2020, 1, 1, 12, 0, 0)  # naive, session-tz-local
-    for tz_name in ("+05:00", "UTC", "-03:30"):
-        state = FakeState()
-        fn = _make_sessionize(tz_name)
-        list(fn((7,), [pd.DataFrame({"ts": [end]})], state))
-        expected = (
-            int(end.replace(tzinfo=_tzinfo_for(tz_name)).timestamp() * 1000)
-            + GAP_SECONDS * 1000
-        )
-        assert state.timeout_ms == expected, tz_name
-    # the three zones disagree pairwise by their offsets — the old
-    # machine-local conversion could not have produced all three
-    assert _tzinfo_for("+05:00").utcoffset(None) == dt.timedelta(hours=5)
-    assert _tzinfo_for("-03:30").utcoffset(None) == -dt.timedelta(
-        hours=3, minutes=30
-    )
-    assert _tzinfo_for(None) is None
-
-
 def test_keep_first_media_only_docs_not_collapsed(spark):
     """The exact-dedup fingerprint covers the FULL span sequence, not
     spans[0].text: two DIFFERENT image-only docs (first span media,
@@ -665,65 +475,3 @@ def test_upsert_null_seq_sorts_after_real_seq_like_batch_twin():
     state = FakeState()
     (out,) = list(_upsert(("d1",), [pdf], state))
     assert out["action"].iloc[0] == "delete" and not out["alive"].iloc[0]
-
-
-def test_sessionize_sorts_across_pandas_chunks():
-    """Arrow splits a big group into multiple pandas chunks in no
-    particular order: events must be sorted ACROSS chunks before the
-    gap scan, or a later chunk's earlier events merge into an
-    already-advanced session (boundaries the batch twin never makes)."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from libswish3_spark.streaming.sessions import _make_sessionize
-
-    class FakeState:
-        exists = False
-        hasTimedOut = False
-
-        def __init__(self):
-            self.stored = None
-
-        @property
-        def get(self):
-            return self.stored
-
-        def update(self, v):
-            self.stored = v
-
-        def getCurrentWatermarkMs(self):
-            return 0
-
-        def setTimeoutTimestamp(self, ms):
-            pass
-
-    late = pd.DataFrame({"ts": [dt.datetime(2020, 1, 1, 11, 0, 0)]})
-    early = pd.DataFrame({"ts": [dt.datetime(2020, 1, 1, 9, 0, 0)]})
-    state = FakeState()
-    fn = _make_sessionize("UTC")
-    outs = list(fn((1,), [late, early], state))  # late chunk first
-    # 9:00 and 11:00 are > 30min apart: the 9:00 session must CLOSE
-    assert len(outs) == 1 and len(outs[0]) == 1
-    assert outs[0]["session_start"].iloc[0] == dt.datetime(2020, 1, 1, 9, 0, 0)
-    assert outs[0]["session_end"].iloc[0] == dt.datetime(2020, 1, 1, 9, 0, 0)
-    # open session state is the 11:00 singleton
-    assert state.stored[0] == dt.datetime(2020, 1, 1, 11, 0, 0)
-
-
-def test_windowed_counts_without_value_column(spark):
-    """The window helper layers over ANY timestamped table: a source
-    without the optional 'value' column aggregates counts only (the
-    hard-coded sum used to raise UNRESOLVED_COLUMN)."""
-    import datetime as dt
-
-    from libswish3_spark.streaming.windows import windowed_event_counts
-
-    df = spark.createDataFrame(
-        [(1, dt.datetime(2020, 1, 1, 0, 5), "click"),
-         (2, dt.datetime(2020, 1, 1, 0, 20), "click")],
-        "user_id long, ts timestamp, event_type string",
-    )
-    out = windowed_event_counts(df).collect()
-    assert len(out) == 1 and out[0]["cnt"] == 2
-    assert "sum_value_c" not in out[0].__fields__
