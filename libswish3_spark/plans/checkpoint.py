@@ -4,15 +4,16 @@ The north rule requires 10^12-document runs to resume from checkpointed
 partition manifests. Mechanism:
 
 * documents are assigned a deterministic ``bucket = pmod(xxhash64(doc_id), B)``;
-* each completed bucket appends its rows to the output (partitioned by
-  bucket) and then records ``(bucket, docs, words, errors, run_id)`` in
-  a manifest table — manifest write happens only *after* the bucket's
-  data is durably written, so a crash can at worst leave a bucket's
-  data present but unrecorded;
-* resume = recompute the bucket set, anti-join against the manifest,
-  process only the missing buckets, and rewrite those buckets' output
-  directories (dynamic partition overwrite), which makes the data+
-  manifest pair idempotent per bucket.
+* each completed chunk of buckets writes its rows to the output
+  (partitioned by bucket), then appends ``(bucket, docs, words, errors,
+  run_id, num_buckets)`` per bucket to a manifest table — the manifest
+  is written only *after* the data, from one read-back job over the
+  just-written files, so a crash can at worst leave a bucket's data
+  present but unrecorded;
+* resume = one existence probe of the manifest and, if present, one read
+  of it for the done-set; only the missing buckets are processed, and
+  their output directories are rewritten (dynamic partition overwrite),
+  which makes the data+manifest pair idempotent per bucket.
 
 This is the batch analogue of Structured Streaming's checkpoint (see
 ``libswish3_spark.streaming``), usable where the input is a static
@@ -35,35 +36,35 @@ def with_bucket(docs: DataFrame, num_buckets: int) -> DataFrame:
     )
 
 
-def completed_buckets(spark: SparkSession, manifest_path: str) -> set[int]:
-    try:
-        rows = spark.read.parquet(manifest_path).select("bucket").distinct().collect()
-        return {r["bucket"] for r in rows}
-    except Exception:
-        return set()
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Existence through the Hadoop FileSystem of ``path``'s scheme, so
+    object-store URIs answer too (``os.path.exists`` sees local paths only)."""
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(sc._jsc.hadoopConfiguration()).exists(p)
 
 
-def _check_bucket_count(
+def completed_buckets(
     spark: SparkSession, manifest_path: str, num_buckets: int
-) -> None:
-    """Croak when a resume changes the bucket count.
+) -> set[int]:
+    """The manifest's done-set; croaks when a resume changes the bucket count.
 
     bucket = pmod(hash(doc_id), B) — under a new B every doc lands in a
     DIFFERENT bucket, so anti-joining the new bucket range against a
     manifest written at the old B silently skips docs (their old bucket
     id is "done") and double-processes others. Manifests written before
-    this guard lack the column and pass (nothing to validate against).
+    the count was recorded read it as null and pass (nothing to validate
+    against). Only an absent manifest means "nothing done": one that
+    exists but cannot be read raises.
     """
-    try:
-        vals = (
-            spark.read.parquet(manifest_path)
-            .select("num_buckets")
-            .distinct()
-            .collect()
-        )
-    except Exception:
-        return
-    prior = {r["num_buckets"] for r in vals} - {None}
+    if not path_exists(spark, manifest_path):
+        return set()
+    rows = (
+        spark.read.schema("bucket int, num_buckets int")
+        .parquet(manifest_path)
+        .collect()
+    )
+    prior = {r["num_buckets"] for r in rows} - {None}
     if prior and prior != {num_buckets}:
         raise ValueError(
             f"resume with num_buckets={num_buckets} but the manifest at "
@@ -72,6 +73,7 @@ def _check_bucket_count(
             "under a different count corrupts the done-set. Re-run with "
             f"num_buckets={sorted(prior)[0]} or start a fresh output path."
         )
+    return {r["bucket"] for r in rows}
 
 
 def run_extraction(
@@ -94,20 +96,19 @@ def run_extraction(
     pushed down to the scan, and a per-bucket loop would re-read the
     whole input once per bucket — O(B × full-scan) at 10^12 docs. One
     chunk = one input scan, one dynamic-partition write, then one
-    manifest append per bucket; the commit point stays manifest-after-
-    data, now at chunk granularity. ``buckets_per_pass`` bounds how much
-    work a driver crash can lose (e.g. 64 over 10k buckets runs ~160
-    scans, each committed, losing at most 0.6% of the run on a crash) —
-    ALL chunks run in this call. ``max_passes`` additionally stops after
-    that many chunks (tests simulate a died run with ``max_passes=1``;
-    an earlier form silently did this whenever buckets_per_pass was
-    set, leaving 99.4% of the corpus unprocessed for a caller who
-    followed the docstring).
+    read-back job that appends the chunk's manifest rows as one file;
+    the commit point stays manifest-after-data, at chunk granularity.
+    ``buckets_per_pass`` bounds how much work a driver crash can lose
+    (e.g. 64 over 10k buckets runs ~160 scans, each committed, losing at
+    most 0.6% of the run on a crash) — ALL chunks run in this call.
+    ``max_passes`` additionally stops after that many chunks (tests
+    simulate a died run with ``max_passes=1``; an earlier form silently
+    did this whenever buckets_per_pass was set, leaving 99.4% of the
+    corpus unprocessed for a caller who followed the docstring).
     """
     manifest_path = os.path.join(output_path, "_manifest")
     data_path = os.path.join(output_path, "data")
-    _check_bucket_count(spark, manifest_path, num_buckets)
-    done = completed_buckets(spark, manifest_path)
+    done = completed_buckets(spark, manifest_path, num_buckets)
     bucketed = with_bucket(docs, num_buckets)
     todo = [b for b in range(num_buckets) if b not in done]
     step = buckets_per_pass or max(len(todo), 1)
@@ -115,7 +116,6 @@ def run_extraction(
     if max_passes is not None:
         chunks = chunks[:max_passes]
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     processed = []
     for chunk in chunks:
         part = bucketed.where(F.col("bucket").isin(chunk)).drop("bucket")
@@ -124,40 +124,35 @@ def run_extraction(
         # the (column-pruned) extraction instead of threading it through
         out = with_bucket(out, num_buckets)
         # data first, manifest second: the commit point is the manifest
-        out.write.mode("overwrite").partitionBy("bucket").parquet(data_path)
+        out.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("bucket").parquet(data_path)
         # stats come from the JUST-WRITTEN parquet (partition-pruned to
         # this chunk), not from `out` — re-aggregating the uncached
         # extract lineage would run the whole Python parse kernel a
-        # second time per chunk, doubling the dominant cost at scale
+        # second time per chunk, doubling the dominant cost at scale.
+        # The explicit schema skips footer inference; the left join from
+        # the chunk's bucket list gives empty buckets their zero rows.
         stats = (
-            spark.read.parquet(data_path)
+            spark.read.schema("nwords long, error string, bucket int")
+            .parquet(data_path)
             .where(F.col("bucket").isin(chunk))
             .groupBy("bucket")
             .agg(
                 F.count("*").alias("docs"),
-                F.coalesce(F.sum("nwords"), F.lit(0)).alias("words"),
-                F.sum(
-                    F.when(F.col("error").isNotNull(), 1).otherwise(0)
-                ).alias("errors"),
+                F.sum("nwords").alias("words"),
+                F.count("error").alias("errors"),
             )
-            .collect()
         )
-        by_bucket = {r["bucket"]: r for r in stats}
-        spark.createDataFrame(
-            [
-                (
-                    b,
-                    by_bucket[b]["docs"] if b in by_bucket else 0,
-                    by_bucket[b]["words"] if b in by_bucket else 0,
-                    by_bucket[b]["errors"] if b in by_bucket else 0,
-                    run_id,
-                    num_buckets,
-                )
-                for b in chunk
-            ],
-            "bucket int, docs long, words long, errors long, run_id string,"
-            " num_buckets int",
-        ).write.mode("append").parquet(manifest_path)
+        buckets = spark.range(1).select(
+            F.explode(F.array(*[F.lit(b) for b in chunk])).alias("bucket")
+        )
+        buckets.join(stats, "bucket", "left").select(
+            "bucket",
+            *[F.coalesce(c, F.lit(0)).alias(c) for c in ("docs", "words", "errors")],
+            F.lit(run_id).alias("run_id"),
+            F.lit(num_buckets).alias("num_buckets"),
+        ).coalesce(1).write.mode("append").parquet(manifest_path)
         processed.extend(chunk)
     return {"processed": processed, "skipped": sorted(done)}
 

@@ -83,7 +83,11 @@ def main(argv=None) -> int:
         q.awaitTermination()
         return 0
 
-    from libswish3_spark.plans.checkpoint import read_extracted, run_extraction
+    from libswish3_spark.plans.checkpoint import (
+        path_exists,
+        read_extracted,
+        run_extraction,
+    )
 
     docs = spark.read.parquet(args.input)
     if args.xinclude:
@@ -109,10 +113,10 @@ def main(argv=None) -> int:
     # derived index builds are idempotent overwrites, but a resumed run
     # that processed zero new buckets can skip recomputing them when the
     # output already exists — they are the most expensive steps here.
-    # (os.path.exists sees only local/NFS paths; for object-store URIs
-    # it returns False and the build safely re-runs.)
+    # (The existence probe goes through Hadoop's FileSystem, so it
+    # answers for object-store URIs as well as local paths.)
     def _fresh_or_missing(path: str) -> bool:
-        return bool(result["processed"]) or not os.path.exists(path)
+        return bool(result["processed"]) or not path_exists(spark, path)
 
     if args.postings and _fresh_or_missing(args.postings):
         from libswish3_spark.operators.postings import extract_index_postings
