@@ -33,9 +33,12 @@ chain below evaluates each stage once.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+import re
+
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from libswish3_spark.functions.text import fingerprint, tokens
+from libswish3_spark.tokenizer import ASCII_TOKEN_PATTERN_SQL
 
 # K=16 in 8 bands of r=2: candidate recall at jaccard s is
 # 1-(1-s^2)^8 = 0.90 at the verify threshold s=0.5 (and 0.97 at
@@ -80,6 +83,19 @@ def shingles(tok_col, n: int = 3) -> Column:
         )
 
     return bind(tok_col, make)
+
+
+_ASCII_TOKEN_RE = re.compile(ASCII_TOKEN_PATTERN_SQL)
+
+
+def ascii_shingles(text, n: int = 3) -> list[str]:
+    """Python twin of ``shingles(tokens(col), n)`` for the Arrow
+    kernels: space-joined word n-grams over the ASCII tokens of the
+    lowercased text, in document order with repeats kept (callers that
+    need the set take first-occurrence distinct); empty for null text
+    or fewer than n tokens."""
+    toks = _ASCII_TOKEN_RE.findall(text.lower()) if isinstance(text, str) else []
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
 
 
 def minhash_signature(sh_col, k: int = MINHASH_K) -> Column:
@@ -210,9 +226,9 @@ def candidate_pairs_from_buckets(
     exploded: DataFrame,
     max_bucket: int | None = 1000,
     pairs: str = "all",
-    star_threshold: int = STAR_THRESHOLD,
 ) -> DataFrame:
-    """(id, bucket) table → candidate pairs (a < b) sharing a bucket.
+    """(id, bucket) table → distinct candidate pairs (a, b), a < b,
+    sharing a bucket.
 
     Works over a freshly computed :func:`doc_band_buckets` OR a STORED
     bucket-index table (operators/signatures.py) — at 100 TB the index
@@ -220,83 +236,60 @@ def candidate_pairs_from_buckets(
     skipping the md5 signature fold entirely.
 
     ``max_bucket`` caps bucket fan-out: a band bucket with more than
-    max_bucket members (boilerplate, templated pages) would contribute
+    max_bucket rows (boilerplate, templated pages) would contribute
     O(size²) pairs — at web scale one hot bucket can dominate the whole
     job. Capped buckets are dropped entirely; their members are still
     reachable through their other (bands-1) buckets, and genuinely
     templated near-dup farms are better handled by exact dedup first.
 
-    ``pairs`` picks the within-bucket edge set:
+    ``pairs`` picks the edge set each surviving bucket emits:
 
-    * ``"all"`` (default) — every pair, O(size²) per bucket. Exact and
-      oracle-friendly, robust to verify-stage edge drops (any two
-      similar members connect directly).
-    * ``"star"`` — each member links only to the bucket's MIN id,
-      O(size) per bucket. Same connected components BEFORE verification
-      (a star spans the bucket), so cluster RESOLUTION over clone
-      families is identical while edge volume collapses — measured on
-      a 1.28 M-doc corpus of 256-clone families: 222 M all-pairs edges
-      in 258 s vs 2.2 M star edges in 15 s (100× fewer, 17× faster,
-      equal clusters). The tradeoff: verification prunes edges
-      INDIVIDUALLY, so two members that are both similar to a third but
-      not to the bucket min can lose their connection; use for massive
-      clone-family workloads (exact-dup-heavy web crawls) where the
-      family structure dominates, keep ``"all"`` when verify-stage
-      precision shapes the clusters.
-    * ``"auto"`` — per-bucket dispatch: all-pairs for buckets with at
-      most ``star_threshold`` members, star above. The scale-safe
-      default for production dedup recipes (submit_extract wires it):
-      ordinary buckets keep all-pairs precision, and the clone-family
-      buckets that would go quadratic (the r5 scale probe measured
-      222 M all-pairs edges vs 2.2 M star edges on a clone-heavy
-      1.28 M-doc corpus, identical resolved clusters) emit O(size)
-      edges. The oracle queries keep explicit ``"all"``.
+    * ``"all"`` (default) — every pair of distinct members, O(size²)
+      per bucket. Exact and oracle-friendly, robust to verify-stage
+      edge drops (any two similar members connect directly).
+    * ``"star"`` — (min id, member) for every other member, O(size) per
+      bucket. Same connected components BEFORE verification (a star
+      spans the bucket), so cluster resolution over clone families is
+      identical while edge volume collapses — measured on a 1.28 M-doc
+      corpus of 256-clone families: 222 M all-pairs edges in 258 s vs
+      2.2 M star edges in 15 s. The tradeoff: verification prunes
+      edges individually, so two members that are both similar to a
+      third but not to the bucket min can lose their connection.
+    * ``"auto"`` — all-pairs for a bucket of at most
+      :data:`STAR_THRESHOLD` rows, star above. The scale-safe default
+      for production dedup recipes (submit_extract wires it): ordinary
+      buckets keep all-pairs precision, clone-family buckets emit
+      O(size) edges. The oracle queries keep explicit ``"all"``.
+
+    One plan serves every mode, and a clone-family bucket's all-pairs
+    output is never built: one window over ``bucket`` computes each
+    row's bucket size ``_n`` and min id ``_min``; the cap is a filter
+    on ``_n``; the left side keeps every member of an all-pairs bucket
+    but only the min of a star bucket; one self-join on ``bucket`` with
+    ``l.id < r.id`` and one ``distinct`` (ids repeat across buckets and
+    rows may repeat within one) give the pairs. The window's
+    hash-partitioning on bucket is what the join needs, so both join
+    sides reuse its one exchange.
     """
     if pairs not in ("all", "star", "auto"):
         raise ValueError(f"pairs must be 'all', 'star' or 'auto', got {pairs!r}")
-    if pairs == "auto":
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("bucket")
-        sized = exploded.withColumn("_n", F.count("*").over(w))
-        if max_bucket is not None:
-            sized = sized.where(F.col("_n") <= max_bucket)
-        small = sized.where(F.col("_n") <= star_threshold).drop("_n")
-        big = sized.where(F.col("_n") > star_threshold).drop("_n")
-        return (
-            candidate_pairs_from_buckets(small, max_bucket=None, pairs="all")
-            .unionByName(
-                candidate_pairs_from_buckets(big, max_bucket=None, pairs="star")
-            )
-            .distinct()
-        )
+    w = Window.partitionBy("bucket")
+    sized = exploded.select(
+        "id",
+        "bucket",
+        F.count("*").over(w).alias("_n"),
+        F.min("id").over(w).alias("_min"),
+    )
     if max_bucket is not None:
-        # cap filter as a COUNT WINDOW over the bucket, not a
-        # groupBy+join: one shuffle of the (id, bucket) table instead
-        # of an aggregate plus a join against it, and the window's
-        # hash-partitioning on bucket is exactly what the pair
-        # self-join below needs — the exchange is planned once and
-        # reused for both join sides (same rows kept either way)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("bucket")
-        exploded = (
-            exploded.withColumn("_n", F.count("*").over(w))
-            .where(F.col("_n") <= max_bucket)
-            .drop("_n")
-        )
-    if pairs == "star":
-        # one aggregate for the per-bucket min, one join: edges
-        # (min, member) for member != min — linear in bucket size
-        mins = exploded.groupBy("bucket").agg(F.min("id").alias("a"))
-        return (
-            exploded.join(mins, "bucket")
-            .where(F.col("id") != F.col("a"))
-            .select("a", F.col("id").alias("b"))
-            .distinct()
-        )
-    left = exploded.alias("l")
-    right = exploded.alias("r")
+        sized = sized.where(F.col("_n") <= max_bucket)
+    hub = F.col("id") == F.col("_min")
+    keep = {
+        "all": F.lit(True),
+        "star": hub,
+        "auto": (F.col("_n") <= STAR_THRESHOLD) | hub,
+    }[pairs]
+    left = sized.where(keep).alias("l")
+    right = sized.alias("r")
     return (
         left.join(
             right,
@@ -356,11 +349,8 @@ def shingle_arrays_vectorized(
     semantics, pinned element-identical by pytest: ASCII token class on
     lowercased text, space-joined n-grams, first-occurrence distinct,
     empty array (never null) for docs with < n tokens or null text."""
-    import re
-
     from pyspark.sql.types import ArrayType, StringType, StructType
 
-    tok_re = re.compile("[a-z0-9'_]+")  # tokenizer.ASCII_TOKEN_PATTERN_SQL
     src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
     schema = StructType([src.schema.fields[0]]).add(
         "sh", ArrayType(StringType())
@@ -370,24 +360,7 @@ def shingle_arrays_vectorized(
         import pandas as pd
 
         for pdf in batches:
-            out = []
-            for text in pdf["_t"]:
-                toks = (
-                    tok_re.findall(text.lower())
-                    if isinstance(text, str) and text
-                    else []
-                )
-                if len(toks) < n:
-                    out.append([])
-                else:
-                    out.append(
-                        list(
-                            dict.fromkeys(
-                                " ".join(toks[i : i + n])
-                                for i in range(len(toks) - n + 1)
-                            )
-                        )
-                    )
+            out = [list(dict.fromkeys(ascii_shingles(t, n))) for t in pdf["_t"]]
             yield pd.DataFrame({"id": pdf["id"], "sh": out})
 
     return src.mapInPandas(kernel, schema=schema)
@@ -436,8 +409,10 @@ def jaccard_verify(
     # ANSI (and a silently dropped pair otherwise). The clamp scores
     # the empty-vs-empty pair 0, so it drops below any threshold > 0.
     jacc = F.floor(common * 10000 / F.greatest(union, F.lit(1))).cast("long")
+    # round, not int(): 0.57 * 10000 is 5699.99…, which int() cuts to
+    # a 5699 bp gate that lets a 5699 bp pair through
     return pairs.select("a", "b", jacc.alias("jaccard_bp")).where(
-        F.col("jaccard_bp") >= int(threshold * 10000)
+        F.col("jaccard_bp") >= round(threshold * 10000)
     )
 
 
@@ -476,7 +451,7 @@ def ngram_jaccard_pairs(
     ).cast("long")
     return (
         pairs.select("a", "b", jacc.alias("jaccard_bp"))
-        .where(F.col("jaccard_bp") >= int(threshold * 10000))
+        .where(F.col("jaccard_bp") >= round(threshold * 10000))  # see jaccard_verify
     )
 
 

@@ -62,14 +62,13 @@ def build_minhash_bucket_index(
     (measured 232 s for 1.28 M docs; hashlib's C md5 plus plain Python
     min-folds beat the lambda interpreter several-fold). Byte-identical
     output to :func:`dedup.doc_band_buckets` is pinned by pytest over
-    the bench corpus: same tokens (ASCII class on lowercased text),
-    same hex slices, same string ordering (ASCII hex compares
-    identically as Python str and UTF8String), same "#" seed / "|"
+    the bench corpus: same 3-grams (:func:`dedup.ascii_shingles`, the
+    Python twin of ``shingles(tokens(col))``), same hex slices, same
+    string ordering (ASCII hex compares identically as Python str and
+    UTF8String), same "#" seed / "|"
     band key construction as minhash_signature / band_buckets — which
     remain the literal form the DuckDB oracles mirror. Docs with < 3
     tokens emit no rows in both forms."""
-    import re
-
     from pyspark.sql.types import StructType
 
     from libswish3_spark.pipeline import ensure_parallelism
@@ -77,7 +76,6 @@ def build_minhash_bucket_index(
     k, bands = D.MINHASH_K, D.MINHASH_BANDS
     r = k // bands
     groups = (k + 3) // 4
-    tok_re = re.compile("[a-z0-9'_]+")  # tokenizer.ASCII_TOKEN_PATTERN_SQL
 
     src = ensure_parallelism(docs).select(
         F.col(id_col).alias("id"), F.col(text_col).alias("_t")
@@ -93,16 +91,12 @@ def build_minhash_bucket_index(
         for pdf in batches:
             ids, buckets = [], []
             for did, text in zip(pdf["id"], pdf["_t"]):
-                toks = (
-                    tok_re.findall(text.lower())
-                    if isinstance(text, str) and text
-                    else []
-                )
-                if len(toks) < 3:
+                grams = D.ascii_shingles(text)
+                if not grams:
                     continue
                 mins = None
-                for i in range(len(toks) - 2):
-                    g = " ".join(toks[i : i + 3]).encode("utf-8")
+                for gram in grams:
+                    g = gram.encode("utf-8")
                     vals = []
                     for gg in range(groups):
                         h = md5(g + b"#" + str(gg).encode()).hexdigest()

@@ -62,18 +62,26 @@ def main(sf_dir="/root/testdata/sf0.001", only=None):
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    failures = run(spark, sf_dir, only)
-    spark.stop()
-    return failures
+    try:
+        return run(spark, sf_dir, only)
+    finally:
+        spark.stop()
 
 
 def run(spark, sf_dir, only=None):
     """Compare every QUERIES entry (or those named in ``only``) with its
-    DuckDB oracle over ``sf_dir``; returns the names that failed."""
+    DuckDB oracle over ``sf_dir``; returns the names that failed.
+
+    A name in ``only`` that is not a QUERIES entry raises ValueError
+    before anything runs: skipping it would report a check that never
+    happened as passed."""
     import duckdb
 
     from libswish3_spark.operators.queries import QUERIES
 
+    unknown = sorted(set(only or ()) - set(QUERIES))
+    if unknown:
+        raise ValueError(f"not registry entries: {', '.join(unknown)}")
     con = duckdb.connect()
     for t in ("documents", "embeddings"):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

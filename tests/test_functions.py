@@ -95,7 +95,7 @@ def test_resolve_clusters_min_id_components(spark):
     assert got == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}
 
 
-def test_resolve_clusters_long_chain_converges(spark):
+def test_resolve_clusters_integer_chain_converges(spark):
     # a 12-node path graph needs multiple propagation rounds
     pairs = spark.createDataFrame([(i, i + 1) for i in range(11)], ["a", "b"])
     got = {r["doc_id"]: r["keeper"] for r in D.resolve_clusters(pairs).collect()}
@@ -578,10 +578,27 @@ def test_resolve_clusters_long_chain_converges(spark):
     """Pointer doubling: a pure chain of 25 nodes (diameter 24) must
     resolve every node to keeper 'n00' well within the default round
     budget (plain propagation would need 24 rounds)."""
+    import warnings
+
     pairs = spark.createDataFrame(
         [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(24)], ["a", "b"]
     )
-    out = {r["doc_id"]: r["keeper"] for r in D.resolve_clusters(pairs, max_rounds=8).collect()}
+    # force the distributed loop: 48 directed edges are under the
+    # driver union-find's edge limit
+    old = spark.conf.get("spark.libswish3.cc.localEdgeLimit", None)
+    spark.conf.set("spark.libswish3.cc.localEdgeLimit", "0")
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            out = {
+                r["doc_id"]: r["keeper"]
+                for r in D.resolve_clusters(pairs, max_rounds=8).collect()
+            }
+    finally:
+        if old is None:
+            spark.conf.unset("spark.libswish3.cc.localEdgeLimit")
+        else:
+            spark.conf.set("spark.libswish3.cc.localEdgeLimit", old)
     assert len(out) == 25
     assert set(out.values()) == {"n00"}
 
@@ -855,6 +872,75 @@ def test_jaccard_verify_empty_shingles_no_divide_by_zero(spark):
            jaccard_verify(docs, cand, "doc_id", "text", threshold=0.3).collect()}
     assert (1, 2) not in got          # empty-vs-empty dropped, no crash
     assert got[(3, 4)] >= 3000        # real pair still verifies
+
+
+def test_jaccard_threshold_is_rounded_not_truncated(spark):
+    """A pair scoring exactly 5699 bp (110 shared of 193 distinct
+    3-grams) fails a 0.57 threshold and passes 0.5699, in both the
+    candidate-gated verify and the all-pairs form (int(0.57 * 10000)
+    is 5699, which used to let it through)."""
+    common = [f"c{i}" for i in range(112)]  # 110 shared 3-grams
+    docs = spark.createDataFrame(
+        [
+            (1, " ".join(common + [f"a{i}" for i in range(41)])),
+            (2, " ".join(common + [f"b{i}" for i in range(42)])),
+        ],
+        ["doc_id", "text"],
+    )
+    cand = spark.createDataFrame([(1, 2)], ["a", "b"])
+    for score in (
+        lambda t: D.jaccard_verify(docs, cand, "doc_id", "text", threshold=t),
+        lambda t: D.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=t),
+    ):
+        assert score(0.57).collect() == []
+        assert [r["jaccard_bp"] for r in score(0.5699).collect()] == [5699]
+
+
+def _reference_candidate_pairs(rows, max_bucket, pairs):
+    """The edge sets candidate_pairs_from_buckets documents, in Python:
+    buckets over max_bucket rows dropped; every a < b pair, or only
+    (min, member) for a star bucket."""
+    from collections import defaultdict
+
+    members = defaultdict(list)
+    for i, b in rows:
+        members[b].append(i)
+    out = set()
+    for ids in members.values():
+        if max_bucket is not None and len(ids) > max_bucket:
+            continue
+        star = pairs == "star" or (pairs == "auto" and len(ids) > D.STAR_THRESHOLD)
+        out |= {(a, b) for a in ids for b in ids if a < b and (not star or a == min(ids))}
+    return out
+
+
+def test_candidate_pairs_match_reference_edge_sets(spark):
+    """All three edge modes equal the documented edge sets on a seeded
+    table with buckets at and just over STAR_THRESHOLD and max_bucket,
+    repeated (id, bucket) rows and string ids shared across buckets."""
+    import random
+
+    rng = random.Random(11)
+    cap, t = 40, D.STAR_THRESHOLD
+    pool = [f"d{i}" for i in range(120)]  # "d9" > "d10": string order
+    rows = []
+    for bucket, size in [
+        ("at_star", t), ("over_star", t + 1), ("at_cap", cap), ("over_cap", cap + 1),
+        ("pair", 2), ("single", 1), ("mid", 7), ("dup_star", t), ("dup_small", 4),
+    ]:
+        rows += [(i, bucket) for i in rng.sample(pool, size)]
+    # repeated rows count toward the bucket size and add no edges: one
+    # repeat tips "dup_star" from all-pairs to star in auto mode
+    rows += [r for r in rows if r[1] == "dup_star"][:1]
+    rows += [r for r in rows if r[1] == "dup_small"][:2]
+    rng.shuffle(rows)
+    exploded = spark.createDataFrame(rows, ["id", "bucket"])
+    for max_bucket in (cap, None):
+        for pairs in ("all", "star", "auto"):
+            got = D.candidate_pairs_from_buckets(exploded, max_bucket, pairs).collect()
+            assert len(got) == len(set(got)), (max_bucket, pairs)
+            want = _reference_candidate_pairs(rows, max_bucket, pairs)
+            assert {(r["a"], r["b"]) for r in got} == want, (max_bucket, pairs)
 
 
 def test_media_features_defaults_missing_columns(spark):
