@@ -10,7 +10,7 @@ A from-scratch reimplementation of the *semantics* of karpet/libswish3
 
 The reference's libxml2 SAX callbacks (reference: src/libswish3/parser.c)
 are replaced by a batched byte-stream markup scanner + DOM-heuristic
-classifier running inside ``mapInPandas`` over Arrow batches; the
+classifier running inside ``mapInArrow`` over Arrow batches; the
 tokenizer (reference: src/libswish3/tokenizer.c) is re-expressed with
 precompiled Unicode character-class regexes, vectorized per batch.
 

@@ -8,31 +8,33 @@ stage has an independent SQL oracle. Scale notes per operator:
 * exact        — one hash-groupBy shuffle on the digest; partial agg
                  map-side, skew-free (digests are uniform).
 * minhash LSH  — text → shingles → k minhashes → b band buckets, all
-                 computed WITHIN each row (zero shuffle until the
-                 candidate join); bucket sizes are capped so a
-                 boilerplate-heavy bucket cannot go quadratic.
+                 computed WITHIN each row by one Arrow batch kernel
+                 (zero shuffle until the candidate join); bucket sizes
+                 are capped so a boilerplate-heavy bucket cannot go
+                 quadratic.
 * jaccard      — exact verification ON LSH CANDIDATE PAIRS ONLY (two
-                 linear joins + an array_intersect per pair). The raw
-                 all-pairs shingle self-join exists for tiny corpora
-                 and tests but must never run at scale.
+                 linear joins + an array_intersect per pair).
 * resolve      — min-id label propagation over verified pairs →
                  (doc_id, keeper) cluster assignment, bounded rounds
                  with per-round lineage truncation.
 * simhash      — fixed-width signature; hamming-radius candidates via
                  band equality on signature nibbles.
 
-Evaluation-count discipline: Catalyst performs no common-subexpression
-elimination across column references — a subtree referenced k times is
-evaluated k times (ProjectCollapse re-inlines staged selects). The
-round-1 formulation paid O(tokens) full-text regexp extractions per
-shingle because of exactly this. :func:`bind` pins any intermediate to
-a higher-order-function lambda variable, which Spark evaluates exactly
-once per row; the whole text → tokens → shingles → signature → buckets
-chain below evaluates each stage once.
+The shingle and minhash kernels are the only Spark form of those
+signatures; the DuckDB oracle SQL in operators/queries.py
+(``_SHINGLE_SQL``, ``ORACLE_MINHASH_BUCKET_INDEX``) is their spec.
+
+Evaluation-count discipline for the Column-expression operators:
+Catalyst performs no common-subexpression elimination across column
+references — a subtree referenced k times is evaluated k times
+(ProjectCollapse re-inlines staged selects). :func:`bind` pins any
+intermediate to a higher-order-function lambda variable, which Spark
+evaluates exactly once per row.
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
@@ -49,8 +51,6 @@ from libswish3_spark.tokenizer import ASCII_TOKEN_PATTERN_SQL
 MINHASH_K = 16
 MINHASH_BANDS = 8  # r = K / BANDS = 2 rows per band
 SIMHASH_BITS = 16
-# lexicographically above every md5 hex digest; array_min identity
-_MINHASH_SENTINEL = "￿"
 
 
 def bind(col: Column, fn) -> Column:
@@ -64,115 +64,47 @@ def bind(col: Column, fn) -> Column:
     return F.element_at(F.transform(F.array(col), fn), 1)
 
 
-def shingles(tok_col, n: int = 3) -> Column:
-    """Word n-gram shingles from a token array (JVM-side, single eval).
-
-    Guarded for short docs: Spark's sequence(0, -1) would descend, so
-    fewer than n tokens yields an empty array explicitly.
-    """
-
-    def make(toks):
-        gram = F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(n)]
-            ),
-        )
-        return F.when(F.size(toks) >= n, F.array_distinct(gram)).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    return bind(tok_col, make)
-
-
 _ASCII_TOKEN_RE = re.compile(ASCII_TOKEN_PATTERN_SQL)
 
 
 def ascii_shingles(text, n: int = 3) -> list[str]:
-    """Python twin of ``shingles(tokens(col), n)`` for the Arrow
-    kernels: space-joined word n-grams over the ASCII tokens of the
-    lowercased text, in document order with repeats kept (callers that
-    need the set take first-occurrence distinct); empty for null text
-    or fewer than n tokens."""
+    """Space-joined word n-grams over the ASCII tokens of the lowercased
+    text (the oracles' ``_SHINGLE_SQL`` before its ``list_distinct``),
+    in document order with repeats kept — callers that need the set
+    take first-occurrence distinct. Empty for null text or fewer than n
+    tokens."""
     toks = _ASCII_TOKEN_RE.findall(text.lower()) if isinstance(text, str) else []
     return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
 
 
-def minhash_signature(sh_col, k: int = MINHASH_K) -> Column:
-    """k-element minhash signature array, computed within the row.
+def _band_keys(text) -> list[str]:
+    """The MINHASH_BANDS LSH bucket keys of one document; empty when it
+    has no 3-gram shingle, so shingle-less docs never bucket-collide.
 
     Hash j of a shingle is the 8-hex-char slice j%4 of
-    md5(shingle || '#' || j//4) — one md5 yields FOUR independent
-    32-bit hash values, so k=16 costs 4 digests per shingle, not 16
-    (the md5 fold is the dominant dedup cost; measured 2x on the
-    chain). String order on fixed-width hex == numeric order, and md5
-    is engine-portable, so the DuckDB oracle is exact. One pass over
-    the shingle array accumulates all k mins; NULL for shingle-less
-    docs so they can never bucket-collide with each other downstream.
+    md5(shingle || '#' || j//4) — one md5 yields four 32-bit hash
+    values, so K=16 costs 4 digests per shingle. Each of the K minhashes
+    is the least slice over the shingles (fixed-width hex: string order
+    is numeric order), and band b's key is md5('b|mh_{br}|...|mh_{br+r-1}').
     """
-
-    def sig(sh):
-        # constant-size expression tree: seeds/groups unroll at RUNTIME
-        # via sequence(), not at plan-build time — Catalyst analysis of
-        # a Python-side k-way unroll costs seconds per query
-        seeds = F.sequence(F.lit(0), F.lit(k - 1))
-        groups = (k + 3) // 4
-        init = F.array_repeat(F.lit(_MINHASH_SENTINEL), k)
-        folded = F.aggregate(
-            sh,
-            init,
-            lambda acc, s: bind(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(groups - 1)),
-                    lambda g: F.md5(F.concat(s, F.lit("#"), g.cast("string"))),
-                ),
-                lambda dg: F.zip_with(
-                    acc,
-                    F.transform(
-                        seeds,
-                        lambda j: F.element_at(
-                            dg, (F.floor(j / 4) + 1).cast("int")
-                        ).substr(((j % 4) * 8 + 1).cast("int"), F.lit(8)),
-                    ),
-                    lambda a, b: F.least(a, b),
-                ),
-            ),
-        )
-        return F.when(F.size(sh) > 0, folded).otherwise(
-            F.lit(None).cast("array<string>")
-        )
-
-    return bind(sh_col, sig)
-
-
-def band_buckets(
-    sh_col, k: int = MINHASH_K, bands: int = MINHASH_BANDS
-) -> Column:
-    """Array of LSH band bucket keys (md5 of each band's minhash rows).
-
-    NULL for shingle-less docs (explode drops them — an all-empty
-    bucket would otherwise pair every empty doc with every other).
-    """
-    r = k // bands
-
-    def mk(sig):
-        # band key 'b|mh_{br}|mh_{br+1}...' built from a runtime slice —
-        # same string as the unrolled concat_ws, constant-size tree
-        arr = F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.md5(
-                F.concat_ws(
-                    "|",
-                    b.cast("string"),
-                    F.array_join(F.slice(sig, b * r + 1, r), "|"),
-                )
-            ),
-        )
-        return F.when(sig.isNotNull(), arr).otherwise(
-            F.lit(None).cast("array<string>")
-        )
-
-    return bind(minhash_signature(sh_col, k), mk)
+    grams = ascii_shingles(text)
+    if not grams:
+        return []
+    k, r = MINHASH_K, MINHASH_K // MINHASH_BANDS
+    md5 = hashlib.md5
+    mins = None
+    for gram in grams:
+        g = gram.encode("utf-8")
+        vals = []
+        for gg in range((k + 3) // 4):
+            h = md5(g + b"#" + str(gg).encode()).hexdigest()
+            vals += [h[0:8], h[8:16], h[16:24], h[24:32]]
+        vals = vals[:k]
+        mins = vals if mins is None else [a if a < b else b for a, b in zip(mins, vals)]
+    return [
+        md5("|".join([str(b)] + mins[b * r : (b + 1) * r]).encode()).hexdigest()
+        for b in range(MINHASH_BANDS)
+    ]
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -188,32 +120,34 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def doc_band_buckets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, bucket) exploded band-bucket table.
+    """(id, bucket) exploded band-bucket table: one row per LSH band of
+    every document with at least one 3-gram shingle.
 
-    The hash chain is computed in a projection and an exchange barrier
-    separates it from the explode: without the barrier, ColumnPruning
-    inlines the whole chain into Generate, whose interpreted eval of
-    nested lambda expressions costs ~3× the projection itself. The
-    barrier shuffle carries only (id, bands×32-hex) — skinny rows,
-    negligible against the corpus at any scale, and the exploded output
-    immediately reshuffles on bucket anyway.
+    The whole chain — tokenize → 3-gram shingles → 4 md5 per shingle →
+    16 min-folds → 8 band keys → explode — runs in ONE Arrow batch
+    kernel (:func:`_band_keys` per row): hashlib's C md5 plus plain
+    Python min-folds beat the JVM's per-element interpretation of
+    equivalent nested lambda expressions several-fold (232 s
+    interpreted for 1.28 M docs). The output equals the DuckDB spec
+    ``ORACLE_MINHASH_BUCKET_INDEX`` (pinned by pytest over the bench
+    corpus plus edge documents)."""
+    from pyspark.sql.types import StructType
 
-    explode_OUTER + null filter, not plain explode: for a non-outer
-    Generate the optimizer infers a ``size(bks) > 0`` predicate and
-    pushes it through BOTH exchanges into the file scan's DataFilters —
-    re-evaluating the entire signature chain per row inside the scan
-    stage (which is as parallel as the file layout, i.e. ONE task for a
-    single-file source: measured 4-5× the whole job). The outer form
-    infers nothing; the post-Generate null filter is on the generated
-    column and cannot sink."""
-    packed = df.select(
-        F.col(id_col).alias("id"),
-        band_buckets(shingles(tokens(F.col(text_col)))).alias("bks"),
-    )
-    packed = packed.repartition("id")
-    return packed.select("id", F.explode_outer("bks").alias("bucket")).where(
-        F.col("bucket").isNotNull()
-    )
+    src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
+    schema = StructType([src.schema.fields[0]]).add("bucket", "string")
+
+    def kernel(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            ids, buckets = [], []
+            for did, text in zip(pdf["id"], pdf["_t"]):
+                keys = _band_keys(text)
+                ids += [did] * len(keys)
+                buckets += keys
+            yield pd.DataFrame({"id": ids, "bucket": buckets})
+
+    return src.mapInPandas(kernel, schema=schema)
 
 
 # "auto" edge mode: all-pairs below this many members, star above —
@@ -308,8 +242,9 @@ def minhash_candidates(
     max_bucket: int | None = 1000,
 ) -> DataFrame:
     """LSH candidate pairs (a < b) sharing at least one band bucket —
-    signature chain computed inline; see candidate_pairs_from_buckets
-    for the stored-index entry and the max_bucket semantics."""
+    buckets computed inline by :func:`doc_band_buckets`; see
+    candidate_pairs_from_buckets for the stored-index entry and the
+    max_bucket semantics."""
     return candidate_pairs_from_buckets(
         doc_band_buckets(df, id_col, text_col), max_bucket
     )
@@ -343,12 +278,13 @@ def shingle_arrays_vectorized(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
     """(id, sh) distinct word-n-gram shingle arrays via ONE Arrow batch
-    kernel — the scale twin of ``shingles(tokens(col))``, whose nested
-    transform/concat_ws lambdas the JVM interprets per element (the
-    dominant cost of the jaccard-verify stage at 1 M+ docs). Same
-    semantics, pinned element-identical by pytest: ASCII token class on
-    lowercased text, space-joined n-grams, first-occurrence distinct,
-    empty array (never null) for docs with < n tokens or null text."""
+    kernel (a JVM lambda fold of the same n-grams interprets per
+    element and dominated the jaccard-verify stage at 1 M+ docs): ASCII
+    token class on lowercased text, space-joined n-grams,
+    first-occurrence distinct, empty array (never null) for docs with
+    < n tokens or null text. The arrays equal the oracles'
+    ``_SHINGLE_SQL`` as sets (pinned by pytest; DuckDB's
+    ``list_distinct`` does not keep order)."""
     from pyspark.sql.types import ArrayType, StringType, StructType
 
     src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
@@ -385,8 +321,7 @@ def jaccard_verify(
     scores each pair; never quadratic in the corpus. Jaccard is
     returned ×10000 as a bigint for engine-portable hashing. The
     shingle arrays come from the Arrow kernel
-    (:func:`shingle_arrays_vectorized`, pinned identical to the
-    ``shingles(tokens(col))`` fold the oracles mirror).
+    :func:`shingle_arrays_vectorized`.
     """
     cand_ids = (
         candidates.select(F.col("a").alias("cid"))
@@ -413,45 +348,6 @@ def jaccard_verify(
     # a 5699 bp gate that lets a 5699 bp pair through
     return pairs.select("a", "b", jacc.alias("jaccard_bp")).where(
         F.col("jaccard_bp") >= round(threshold * 10000)
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.5, n: int = 3
-) -> DataFrame:
-    """Exact n-gram Jaccard for ALL pairs sharing a shingle.
-
-    Quadratic per shared-shingle bucket — tests/tiny corpora only; at
-    scale gate behind LSH: ``jaccard_verify(df, minhash_candidates(df,
-    ...), ...)``, which is what the registered dedup queries do.
-    """
-    sh = (
-        df.select(
-            F.col(id_col).alias("id"),
-            shingles(tokens(F.col(text_col)), n).alias("sh"),
-        )
-        # outer + null filter: see doc_band_buckets (a plain explode's
-        # inferred size()>0 predicate sinks the shingle chain into the scan)
-        .select("id", F.size("sh").alias("n_sh"), F.explode_outer("sh").alias("shingle"))
-        .where(F.col("shingle").isNotNull())
-    )
-    l, r = sh.alias("l"), sh.alias("r")
-    pairs = (
-        l.join(r, (F.col("l.shingle") == F.col("r.shingle")) & (F.col("l.id") < F.col("r.id")))
-        .groupBy(
-            F.col("l.id").alias("a"),
-            F.col("r.id").alias("b"),
-            F.col("l.n_sh").alias("na"),
-            F.col("r.n_sh").alias("nb"),
-        )
-        .agg(F.count("*").alias("common"))
-    )
-    jacc = F.floor(
-        F.col("common") * 10000 / (F.col("na") + F.col("nb") - F.col("common"))
-    ).cast("long")
-    return (
-        pairs.select("a", "b", jacc.alias("jaccard_bp"))
-        .where(F.col("jaccard_bp") >= round(threshold * 10000))  # see jaccard_verify
     )
 
 
@@ -484,12 +380,10 @@ def resolve_clusters(
     the orders of magnitude live — and below a size floor the
     distributed algorithm IS the overhead): each doubling round costs
     3+ job launches regardless of data size, so a small edge set pays
-    seconds of pure scheduling. When the materialized pair table holds
-    at most ``spark.libswish3.cc.localEdgeLimit`` directed edges
-    (default 2M; as collected python Rows plus the union-find dict that
-    is up to a few hundred MB of driver memory with string ids — size
-    the knob to the driver heap, or set 0 to always run distributed),
-    the components are resolved by a driver-side min-id
+    seconds of pure scheduling. When the materialized pair table fits
+    the driver (:func:`_local_pair_limit`: a fixed share of
+    ``spark.driver.memory`` at the measured peak RSS per collected
+    pair), the components are resolved by a driver-side min-id
     union-find, which is definitionally the same labeling (keeper =
     component minimum; union-find is direction- and duplicate-
     agnostic, so it reads the RAW pairs and skips the edge
@@ -503,13 +397,8 @@ def resolve_clusters(
     # materialized once: the local gate counts it, and every doubling
     # round otherwise re-runs the whole candidate+verify pipeline
     raw = pairs.select("a", "b").localCheckpoint(eager=True)
-    try:
-        local_limit = int(
-            spark.conf.get("spark.libswish3.cc.localEdgeLimit", "2000000")
-        )
-    except ValueError:
-        local_limit = 2_000_000
-    if local_limit > 0 and 2 * raw.count() <= local_limit:
+    local_limit = _local_pair_limit(spark)
+    if local_limit > 0 and raw.count() <= local_limit:
         return _resolve_clusters_local(spark, raw)
     edges = (
         raw.select(F.col("a").alias("src"), F.col("b").alias("dst"))
@@ -572,6 +461,25 @@ def resolve_clusters(
 
         warnings.warn(msg, RuntimeWarning, stacklevel=2)
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("keeper"))
+
+
+# Peak driver RSS per collected pair on the local path, JVM plus Python
+# (the collect, the Row objects, the union-find dict and the output
+# frame), measured with 24- and 48-char string ids: 1.75-1.9 KB/pair.
+_LOCAL_CC_PAIR_BYTES = 2048
+# share of spark.driver.memory the local path may spend on that
+_LOCAL_CC_MEMORY_SHARE = 0.5
+
+
+def _local_pair_limit(spark) -> int:
+    """Most raw pairs resolve_clusters collects to the driver: 1g of
+    driver memory (Spark's default) admits 262 144 pairs. The size is
+    read with Spark's own parser, so a bare number means MiB as it does
+    for the JVM heap."""
+    sc = spark.sparkContext
+    mem = sc.getConf().get("spark.driver.memory", "1g")
+    mib = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsMb(mem)
+    return int(mib * 2**20 * _LOCAL_CC_MEMORY_SHARE) // _LOCAL_CC_PAIR_BYTES
 
 
 def _resolve_clusters_local(spark, edges: DataFrame) -> DataFrame:
@@ -707,8 +615,12 @@ def duplicated_ngram_starts(
             F.array().cast("array<string>")
         )
 
-    # outer + null filter: see doc_band_buckets (a plain posexplode's
-    # inferred size()>0 predicate sinks the window-hash chain into the scan)
+    # outer + null filter, not a plain posexplode: for a non-outer
+    # Generate the optimizer infers a size(...) > 0 predicate and pushes
+    # it into the file scan's DataFilters, re-running the window-hash
+    # chain inside the scan stage (one task per source file). The outer
+    # form infers nothing; the null filter is on the generated column
+    # and cannot sink.
     exploded = df.select(
         F.col(id_col).alias("id"),
         F.posexplode_outer(bind(toks, gram_hashes)).alias("pos", "gh"),

@@ -34,7 +34,8 @@ def cosine(a, b) -> Column:
     # NaN cosine passes every `bp >= τ` gate, so one padded embedding
     # would dominate its whole cell/bucket (and DuckDB disagrees on
     # NaN, breaking the oracles). Guarded it scores 0 — identically in
-    # Spark, DuckDB and numpy; same rationale as ivf_cell_sql's guard.
+    # Spark, DuckDB and numpy; same rationale as the IVF cell's clamp
+    # in _lsh_columns.
     return dot(a, b) / F.greatest(norm(a) * norm(b), F.lit(1e-12))
 
 
@@ -79,9 +80,9 @@ def brute_force_topk(
 
 def random_planes(dims: int, n_planes: int = 8, seed: int = 42) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes (md5-derived weights in
-    [-1, 1]). Generated driver-side and embedded as LITERALS in both the
-    Spark expression and the SQL oracle, so both engines see identical
-    constants — the oracle-able form of 'seeded random planes'."""
+    [-1, 1]). Generated driver-side and shipped as constants to both the
+    Spark kernel and the SQL oracle, so both engines see identical
+    weights — the oracle-able form of 'seeded random planes'."""
     import hashlib
 
     planes = []
@@ -96,48 +97,86 @@ def random_planes(dims: int, n_planes: int = 8, seed: int = 42) -> list[list[flo
     return planes
 
 
-def _sql_dot(vec_sql: str, plane: list[float]) -> str:
-    """SQL text for dot(vec, literal plane) with the exact float math of
-    :func:`dot` (promote to double, left fold) — built as ONE expression
-    string because composing thousands of plane-weight literals through
-    the Column API costs seconds of py4j round-trips on the driver
-    (measured: 7.3 s to BUILD the 4-table probe plan vs 0.6 s to run
-    it), while expr() is a single parse.
+def _left_fold_dots(vecs, W):
+    """(rows × m) dot products of each vector with each column of ``W``
+    (dims × m), summed left to right from 0.0 in float64 — the oracle
+    SQL's order, so every sign and score equals the scalar folds of
+    query_probes / ivf_query_probes bit for bit — and the mask of rows
+    that have one (a null vector or one of another width has none)."""
+    import numpy as np
 
-    The LAMBDA form is kept deliberately (round-6 finding): an
-    unrolled per-element tree is faster in an isolated scan projection,
-    but an L-table × n-plane × dims tree (~15k Catalyst nodes) OOMs a
-    default-sized (1 GB) driver heap during analysis, and inside a
-    join's fused codegen even one 64-term tree trips the generated-
-    method size limit, dropping the whole stage to interpreted eval
-    (measured 10.1 s vs 4.4 s on the embedding pair join)."""
-    # 0.123D double literals, not CAST('0.123' AS DOUBLE): the same
-    # constant bit-for-bit (verified), at half the Catalyst nodes —
-    # analysis time of the 4-table probe tree is a per-query driver
-    # cost worth shaving
-    arr = "array(" + ", ".join(f"{w!r}D" for w in plane) + ")"
-    return (
-        f"aggregate(zip_with({vec_sql}, {arr},"
-        " (x, y) -> CAST(x * y AS DOUBLE)),"
-        " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
+    dims = W.shape[0]
+    ok = np.array([v is not None and len(v) == dims for v in vecs], dtype=bool)
+    V = np.zeros((len(vecs), dims))
+    if ok.any():
+        V[ok] = np.stack([np.asarray(v, dtype=np.float64) for v in vecs[ok]])
+    acc = np.zeros((len(vecs), W.shape[1]))
+    for i in range(dims):
+        acc += V[:, i, None] * W[i]
+    return acc, ok
 
 
-def plane_signature_sql(vec_sql: str, planes: list[list[float]]) -> str:
-    """SQL text: signature int with bit p set iff dot(vec, plane_p) >= 0."""
-    return " + ".join(
-        f"(CASE WHEN {_sql_dot(vec_sql, plane)} >= 0"
-        f" THEN CAST({2**p} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for p, plane in enumerate(planes)
-    )
+def _lsh_columns(
+    df: DataFrame,
+    vec_col: str,
+    signatures: dict[str, list[list[float]]],
+    cells: tuple[str, list[list[float]]] | None = None,
+) -> DataFrame:
+    """``df`` plus a bigint column per ``signatures`` entry — bit p set
+    iff dot(vec, planes[p]) >= 0 — and, with ``cells=(name,
+    centroids)``, an int column: the 1-based centroid with the highest
+    dot(vec, c) / sqrt(max(||c||², 1e-12)), first max winning (the
+    clamp scores an all-zero centroid 0, not NaN). Null for a vector
+    with no dot product.
 
+    The one Spark form of the hyperplane signatures and the IVF cell:
+    one Arrow batch kernel for all tables and the cell. A Column
+    expression would fold interpreted per element, and its literal
+    plane tree costs seconds of Catalyst analysis per query."""
+    import math
 
-def plane_signature(vec_col, planes: list[list[float]]) -> Column:
-    """Signature int: bit p set iff dot(vec, plane_p) >= 0.
+    import numpy as np
+    from pyspark.sql.types import StructType
 
-    ``vec_col`` must be a column NAME (or SQL fragment) — the expression
-    is assembled as SQL text, see _sql_dot."""
-    return F.expr(plane_signature_sql(vec_col, planes))
+    cell_col, cents = cells or (None, [])
+    planes = [p for ps in signatures.values() for p in ps]
+    W = np.asarray(planes + list(cents), dtype=np.float64).T
+    dens = []
+    for c in cents:
+        cc = 0.0
+        for w in c:
+            cc += float(w) * float(w)
+        dens.append(math.sqrt(max(cc, 1e-12)))
+
+    # copy before .add — df.schema is the DataFrame's cached StructType
+    # and .add mutates in place
+    schema = StructType(list(df.schema.fields))
+    for name in signatures:
+        schema = schema.add(name, "long")
+    if cell_col is not None:
+        schema = schema.add(cell_col, "integer")
+
+    def nullable(values, ok):
+        if ok.all():
+            return values
+        out = values.astype(object)
+        out[~ok] = None
+        return out
+
+    def kernel(batches):
+        for pdf in batches:
+            scores, ok = _left_fold_dots(pdf[vec_col].to_numpy(), W)
+            off = 0
+            for name, ps in signatures.items():
+                bits = scores[:, off : off + len(ps)] >= 0
+                pdf[name] = nullable(bits @ (2 ** np.arange(len(ps))), ok)
+                off += len(ps)
+            if cell_col is not None:
+                best = (scores[:, off:] / dens).argmax(axis=1).astype(np.int32)
+                pdf[cell_col] = nullable(best + 1, ok)
+            yield pdf
+
+    return df.mapInPandas(kernel, schema=schema)
 
 
 def embedding_near_dup_pairs(
@@ -170,9 +209,10 @@ def embedding_near_dup_pairs(
     hash-partitioned on sig — never the document payload.
 
     Pass ``sig_col`` to read a STORED signature column (computed once at
-    ingest by operators/signatures.py) instead of folding the planes in
-    the scan — the 100 TB shape, where every near-dup query starts from
-    the materialized index.
+    ingest by operators/signatures.py) instead of computing the
+    signature from ``planes`` in the scan (:func:`_lsh_columns`) — the
+    100 TB shape, where every near-dup query starts from the
+    materialized index.
 
     Pair scoring runs over per-row PRECOMPUTED norms (one lambda fold
     per pair instead of three — measured ~3x on the bucket self-join;
@@ -184,11 +224,13 @@ def embedding_near_dup_pairs(
             "embedding_near_dup_pairs: pass planes (in-scan signature fold) "
             "or sig_col (stored signature index column)"
         )
-    sig = F.col(sig_col) if sig_col is not None else plane_signature(vec_col, planes)
+    if sig_col is None:
+        sig_col = "_sig"
+        df = _lsh_columns(df.select(id_col, vec_col), vec_col, {sig_col: planes})
     b = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
-        sig.alias("sig"),
+        F.col(sig_col).alias("sig"),
         norm(F.col(vec_col)).alias("nrm"),
     )
     if max_bucket is not None:
@@ -231,7 +273,11 @@ def query_probes(query_vec, planes: list[list[float]], radius: int = 2) -> list[
     1 + n + C(n,2) buckets per table."""
     qsig = 0
     for p, plane in enumerate(planes):
-        d = sum(float(a) * b for a, b in zip(query_vec, plane))
+        # an explicit left fold, the oracle SQL's order: sum() of floats
+        # is compensated from Python 3.12 on
+        d = 0.0
+        for a, b in zip(query_vec, plane):
+            d += float(a) * b
         if d >= 0:
             qsig += 2**p
     n = len(planes)
@@ -262,23 +308,20 @@ def lsh_bucketed_topk(
     angle θ disagrees per plane with prob θ/π); L tables raise recall
     to 1-(1-r)^L at L× the candidate cost — the standard knob. At scale
     the L signatures are stored/bucketed columns (compute once at
-    ingest); here they are computed in the scan projection — still a
-    narrow scan-side filter pruning the corpus before the exact top-k
-    (TakeOrdered, no global sort).
-
-    The probe condition is one OR of per-table IN-list tests so that a
-    row matching an early table short-circuits the remaining signature
-    folds; the folds stay the compact lambda form deliberately (an
-    unrolled L-table tree OOMs a default-sized driver heap during
-    Catalyst analysis — measured round 6, see _sql_dot)."""
-    conds = []
-    for t in range(n_tables):
-        planes = random_planes(len(query_vec), n_planes, seed + t)
-        probes = query_probes(query_vec, planes, probe_radius)
-        in_list = ", ".join(f"CAST({p} AS BIGINT)" for p in sorted(probes))
-        conds.append(f"({plane_signature_sql(vec_col, planes)}) IN ({in_list})")
-    return brute_force_topk(
-        df.where(F.expr(" OR ".join(conds))), id_col, vec_col, query_vec, k
+    ingest, :func:`ann_topk_from_signatures`); here they are computed
+    in the scan by the same kernel the ingest build uses
+    (:func:`_lsh_columns`), still a narrow filter pruning the corpus
+    before the exact top-k (TakeOrdered, no global sort)."""
+    sigs = _lsh_columns(
+        df.select(id_col, vec_col),
+        vec_col,
+        {
+            f"sig{t}": random_planes(len(query_vec), n_planes, seed + t)
+            for t in range(n_tables)
+        },
+    )
+    return ann_topk_from_signatures(
+        sigs, id_col, vec_col, query_vec, k, n_planes, n_tables, seed, probe_radius
     )
 
 
@@ -413,42 +456,13 @@ def ivf_centroids(emb_df: DataFrame, id_col: str, vec_col: str, n_cells: int = I
     return [list(r["v"]) for r in rows]
 
 
-def ivf_cell_sql(vec_sql: str, centroids: list[list[float]]) -> str:
-    """SQL text: 1-based index of the centroid with the highest
-    direction-normalized dot product (dot(v,c)/||c|| — the vector's own
-    norm is constant across cells, so it cannot change the argmax and
-    is omitted). First-max-wins on exact ties (array_position), which
-    the oracle mirrors as ORDER BY d DESC, cnum."""
-    import math
-
-    parts = []
-    for c in centroids:
-        # the centroid's own norm is a CONSTANT: fold it driver-side
-        # with the same double ops (left-fold of double products, max,
-        # sqrt — all correctly-rounded IEEE, so the literal equals what
-        # the old in-plan sqrt(greatest(...)) computed); the vec dot
-        # stays the lambda fold (see _sql_dot on why not unrolled)
-        dot_ = _sql_dot(vec_sql, [float(w) for w in c])
-        cc = 0.0
-        for w in c:
-            cc += float(w) * float(w)
-        # greatest(cc, 1e-12): an all-zero centroid (failed/padded
-        # encodes are commonly zero vectors) would otherwise divide by
-        # zero — NaN sorts GREATEST in Spark, silently assigning every
-        # row to the degenerate cell. The guard scores it 0 instead,
-        # identically in Spark, DuckDB (oracle) and Python (probes).
-        den = math.sqrt(max(cc, 1e-12))
-        parts.append(f"({dot_} / CAST({den!r} AS DOUBLE))")
-    ds = "array(" + ", ".join(parts) + ")"
-    return f"array_position({ds}, array_max({ds}))"
-
-
 def ivf_query_probes(
     query_vec, centroids: list[list[float]], nprobe: int = IVF_NPROBE
 ) -> list[int]:
-    """Top-``nprobe`` cell numbers (1-based) for a query vector —
-    Python double math folds left like the SQL expressions, so the
-    probe set matches what the oracle derives."""
+    """Top-``nprobe`` cell numbers (1-based) for a query vector, best
+    first, ties to the lower cell — Python double math folds left like
+    the oracle SQL, so the probe set matches what the oracle derives.
+    The zero-norm clamp matches :func:`_lsh_columns`."""
     import math
 
     scored = []
@@ -459,7 +473,6 @@ def ivf_query_probes(
             d += float(x) * float(y)
         for y in c:
             cc += float(y) * float(y)
-        # max(cc, 1e-12) mirrors the SQL greatest() zero-norm guard
         scored.append((-(d / math.sqrt(max(cc, 1e-12))), idx + 1))
     return [cell for _, cell in sorted(scored)[:nprobe]]
 
@@ -499,11 +512,9 @@ def ann_topk_from_signatures(
     """ANN over a STORED signature-index table (columns sig0..sig{L-1}
     written once at ingest, operators/signatures.py): the probe filter
     is L tiny integer IN-lists over stored columns — no per-query plane
-    fold, no ~2000-node literal tree for Catalyst to chew (the in-scan
-    lsh_bucketed_topk pays ~1.4 s of analysis per query; this plans in
-    milliseconds), and on a bucketed/partitioned index the IN-lists
-    prune partitions. Same result set as lsh_bucketed_topk by
-    construction — identical planes, identical probes."""
+    fold, and on a bucketed/partitioned index the IN-lists prune
+    partitions. lsh_bucketed_topk is this filter over signatures
+    computed in the scan — identical planes, identical probes."""
     cond = None
     for t in range(n_tables):
         planes = random_planes(len(query_vec), n_planes, seed + t)
@@ -519,48 +530,12 @@ def assign_cells_vectorized(
     vec_col: str = "embedding",
     out_col: str = "ivf_cell",
 ) -> DataFrame:
-    """Arrow-batched IVF cell assignment for LARGE centroid counts —
-    the 100 TB path. ``ivf_cell_sql`` unrolls one dot-product branch
-    per centroid into the plan; at 16 cells that's a fine literal
-    tree, but SemDeDup-style clustering sizes k ∝ corpus (thousands+
-    of cells) and the unrolled tree would choke Catalyst. Here the
-    centroid matrix rides into each Arrow batch once and the argmax is
-    one (batch × dims) @ (dims × k) matrix multiply per batch.
-
-    Semantics match ``ivf_cell_sql``: score = dot(v, c)/max(||c||,
-    1e-12) (direction-normalized; the row's own norm can't change the
-    argmax), first-max-wins on ties (np.argmax = first occurrence =
-    array_position's first match), 1-based cell numbers. Float64
-    summation ORDER differs (BLAS pairwise vs the SQL fold), so exact
-    score ties-to-the-ulp can in principle route differently — the
-    agreement pytest pins both paths identical on random corpora."""
-    import numpy as np
-
-    C = np.asarray(centroids, dtype=np.float64)  # (k, dims)
-    # sqrt(max(||c||², 1e-12)) — the EXACT clamp ivf_cell_sql applies
-    # (greatest inside the sqrt), so even degenerate sub-1e-6-norm
-    # centroids score identically on both paths
-    Cn = (C / np.sqrt(np.maximum((C * C).sum(axis=1), 1e-12))[:, None]).T
-
-    from pyspark.sql.types import StructType
-
-    # copy before .add — df.schema is the DataFrame's cached StructType
-    # and .add mutates in place (the source frame would grow a phantom
-    # column)
-    out_schema = StructType(list(df.schema.fields)).add(out_col, "integer")
-
-    def fn(batches):
-        for pdf in batches:
-            if len(pdf):
-                V = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                pdf[out_col] = (V @ Cn).argmax(axis=1).astype("int32") + 1
-            else:
-                pdf[out_col] = np.array([], dtype=np.int32)
-            yield pdf
-
-    return df.mapInPandas(fn, schema=out_schema)
+    """Arrow-batched IVF cell assignment: ``df`` plus ``out_col``, the
+    1-based cell :func:`_lsh_columns` assigns (the IVF half of the
+    stored signature index). The centroid matrix rides into each Arrow
+    batch once, so SemDeDup-style cell counts (k ∝ corpus, thousands
+    of cells) cost one fold per batch, not a plan tree per cell."""
+    return _lsh_columns(df, vec_col, {}, (out_col, centroids))
 
 
 SEMDEDUP_BP = 3000  # cosine×10000 duplicate threshold (param; real

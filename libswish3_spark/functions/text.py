@@ -222,8 +222,8 @@ def chunk_token_windows(
     Narrow per-row transform + explode, no shuffle: the chunk array is
     built within the row (guarded sequence — Spark's sequence(0,-1)
     DESCENDS for empty docs) and exploded with the outer+null-filter
-    form (see dedup.doc_band_buckets: a plain explode's inferred
-    size()>0 filter would sink the tokenize into the scan). Token-less
+    form (a plain explode's inferred size()>0 filter would sink the
+    tokenize into the scan; see dedup.duplicated_ngram_starts). Token-less
     documents produce no training rows, by definition of the op.
 
     Returns (id, chunk_idx, n_tokens, chunk_text).

@@ -774,12 +774,15 @@ def q_contamination(spark, sf_dir):
     shingles that appear in a held-out benchmark set (docs with
     doc_id % 97 == 0 stand in for the eval set). Shape at scale: the
     benchmark shingle set is small → broadcast semi-join against the
-    corpus' exploded shingles, then a per-doc partial count."""
+    corpus' exploded shingles, then a per-doc partial count. The
+    shingle sets come from the Arrow kernel
+    (``dedup.shingle_arrays_vectorized``)."""
     docs = _docs(spark, sf_dir)
-    sh = docs.select(
-        "doc_id",
-        D.shingles(T.tokens(F.col("text"))).alias("sh"),
-    ).select("doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle"))
+    sh = D.shingle_arrays_vectorized(docs, "doc_id", "text").select(
+        F.col("id").alias("doc_id"),
+        F.size("sh").alias("n_sh"),
+        F.explode("sh").alias("shingle"),
+    )
     bench = (
         sh.where(F.col("doc_id") % 97 == 0).select("shingle").distinct()
     )
@@ -1403,15 +1406,15 @@ def q_dedup_minhash_lsh(spark, sf_dir):
 
 
 def _minhash_sql(j):
-    # hash j = 8-hex-char slice j%4 of md5(s || '#' || j//4), mirroring
-    # minhash_signature's digest slicing (4 hash values per md5)
+    # hash j = 8-hex-char slice j%4 of md5(s || '#' || j//4): the spec
+    # of dedup._band_keys' digest slicing (4 hash values per md5)
     g, off = j // 4, 8 * (j % 4) + 1
     return f"list_min(list_transform(sh, s -> substr(md5(s || '#{g}'), {off}, 8)))"
 
 
 def _bucket_list_sql():
     """SQL list literal of the 8 band-bucket keys over a shingle column
-    ``sh`` — mirrors functions/dedup.band_buckets exactly."""
+    ``sh`` — the spec of functions/dedup.doc_band_buckets' kernel."""
     r = D.MINHASH_K // D.MINHASH_BANDS
     buckets = []
     for b in range(D.MINHASH_BANDS):
@@ -2240,9 +2243,9 @@ ORACLE_MEDIA_VIDEO_FEATURES = _build_media_video_oracle()
 # --------------------------------------------------------------------------
 # Merged registry entries
 #
-# The driver's correctness harness runs at most 50 registry entries per
-# round (CORRECTNESS_r04 covered exactly the first 50 of 58 in registry
-# order). Rather than leave 8 queries permanently untested, related
+# An earlier correctness harness ran at most 50 registry entries, so
+# the entries past the 50th in registry order went unchecked. Rather
+# than leave those queries untested, related
 # queries are merged into single union-schema entries below: every
 # underlying code path still executes and is still value-hash-checked
 # against its oracle, in one driver row. The un-merged q_* functions

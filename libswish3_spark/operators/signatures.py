@@ -4,19 +4,23 @@ The dedup/ANN layer's signature chains (minhash band buckets over text,
 random-hyperplane signatures over embeddings) are deterministic
 functions of the corpus — at 100 TB they belong in materialized index
 tables written ONCE at ingest, not re-folded per query (the md5 shingle
-fold dominates every minhash query; the plane fold plus its ~2000-node
-literal probe tree dominates every ANN query's plan time).
+fold dominates every minhash query, the plane fold every ANN query).
+Both chains are Arrow batch kernels, the one Spark form of each
+signature; the DuckDB oracle SQL in operators/queries.py is their
+spec.
 
 Two index tables:
 
 * minhash bucket index ``(id, bucket)`` — the exploded band-bucket
-  table (functions/dedup.doc_band_buckets). Every minhash-family query
-  (candidates, jaccard verify, cluster resolve, dedup apply) starts
-  from it via ``dedup.candidate_pairs_from_buckets``. Written
+  table, built by functions/dedup.doc_band_buckets' Arrow kernel.
+  Every minhash-family query (candidates, jaccard verify, cluster
+  resolve, dedup apply) starts from it via
+  ``dedup.candidate_pairs_from_buckets``. Written
   partitioned-by-nothing but bucketable on ``bucket`` in a real
   deployment (the candidate self-join then co-locates).
-* embedding signature index ``(id, vec, sig0..sig{L-1})`` — one stored
-  int per LSH table. ANN reads it through
+* embedding signature index ``(id, vec, sig0..sig{L-1}, ivf_cell)`` —
+  one stored int per LSH table plus the IVF cell, built by
+  functions/similarity._lsh_columns' Arrow kernel. ANN reads it through
   ``similarity.ann_topk_from_signatures`` (integer IN-list probes, no
   per-query plane fold); near-dup bucketing reads ``sig0`` through
   ``embedding_near_dup_pairs(sig_col=...)``.
@@ -44,7 +48,7 @@ ANN_TABLES = 4
 ANN_SEED = 42
 # bump when the index schema/content rule changes — keys the on-disk
 # cache so stale layouts rebuild instead of being read back silently
-_INDEX_VERSION = 3
+_INDEX_VERSION = 4
 
 
 def build_minhash_bucket_index(
@@ -53,67 +57,13 @@ def build_minhash_bucket_index(
     text_col: str = "text",
 ) -> DataFrame:
     """(id, bucket) exploded band-bucket table — the storable minhash
-    index (K/bands per functions/dedup defaults, recall-measured).
-
-    The whole chain — tokenize → 3-gram shingles → 4 md5/shingle → 16
-    min-folds → 8 band keys → explode — runs in ONE Arrow batch kernel:
-    the expression form's nested aggregate/zip_with/transform lambdas
-    are interpreted per element on the JVM and dominated the ingest
-    (measured 232 s for 1.28 M docs; hashlib's C md5 plus plain Python
-    min-folds beat the lambda interpreter several-fold). Byte-identical
-    output to :func:`dedup.doc_band_buckets` is pinned by pytest over
-    the bench corpus: same 3-grams (:func:`dedup.ascii_shingles`, the
-    Python twin of ``shingles(tokens(col))``), same hex slices, same
-    string ordering (ASCII hex compares identically as Python str and
-    UTF8String), same "#" seed / "|"
-    band key construction as minhash_signature / band_buckets — which
-    remain the literal form the DuckDB oracles mirror. Docs with < 3
-    tokens emit no rows in both forms."""
-    from pyspark.sql.types import StructType
-
+    index (K/bands per functions/dedup defaults, recall-measured):
+    :func:`dedup.doc_band_buckets`'s Arrow kernel over the input,
+    spread first so a single-file source does not run the md5 fold on
+    one core. Docs with < 3 tokens emit no rows."""
     from libswish3_spark.pipeline import ensure_parallelism
 
-    k, bands = D.MINHASH_K, D.MINHASH_BANDS
-    r = k // bands
-    groups = (k + 3) // 4
-
-    src = ensure_parallelism(docs).select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("_t")
-    )
-    schema = StructType([src.schema.fields[0]]).add("bucket", "string")
-
-    def kernel(batches):
-        import hashlib
-
-        import pandas as pd
-
-        md5 = hashlib.md5
-        for pdf in batches:
-            ids, buckets = [], []
-            for did, text in zip(pdf["id"], pdf["_t"]):
-                grams = D.ascii_shingles(text)
-                if not grams:
-                    continue
-                mins = None
-                for gram in grams:
-                    g = gram.encode("utf-8")
-                    vals = []
-                    for gg in range(groups):
-                        h = md5(g + b"#" + str(gg).encode()).hexdigest()
-                        vals += [h[0:8], h[8:16], h[16:24], h[24:32]]
-                    vals = vals[:k]
-                    mins = (
-                        vals
-                        if mins is None
-                        else [a if a < b else b for a, b in zip(mins, vals)]
-                    )
-                for b in range(bands):
-                    key = "|".join([str(b)] + mins[b * r : (b + 1) * r])
-                    ids.append(did)
-                    buckets.append(md5(key.encode()).hexdigest())
-            yield pd.DataFrame({"id": ids, "bucket": buckets})
-
-    return src.mapInPandas(kernel, schema=schema)
+    return D.doc_band_buckets(ensure_parallelism(docs), id_col, text_col)
 
 
 def build_embedding_signature_index(
@@ -127,33 +77,18 @@ def build_embedding_signature_index(
     centroids: list | None = None,
 ) -> DataFrame:
     """(id, vec, sig0..sig{L-1}, ivf_cell) — one signature int per LSH
-    table plus the IVF coarse-cell assignment, identical plane/centroid
-    literals to the in-scan paths (similarity.random_planes /
-    ivf_centroids) so stored and computed results agree. In a
-    real deployment this table is PARTITIONED BY ivf_cell (probe filter
-    = partition pruning) and bucketed on the sig columns.
-
-    All signatures and the cell come from ONE Arrow batch kernel: per
-    batch, a single (rows × dims) @ (dims × planes) matmul per table
-    plus one for the centroids — the expression form
-    (similarity.plane_signature / ivf_cell_sql) evaluates its
-    zip_with/aggregate lambdas INTERPRETED per element (higher-order
-    functions never enter whole-stage codegen), and at 512 k × 64-dim
-    the measured build is minutes interpreted vs seconds here.
-    Semantics are identical (float64 products, >= 0 sign bits,
-    first-max cell; only the float64 SUMMATION order differs — BLAS
-    pairwise vs the fold — a sub-ulp effect pinned equal by pytest on
-    the bench corpora).
+    table plus the IVF coarse-cell assignment, from the same planes and
+    centroids the query side uses (similarity.random_planes /
+    ivf_centroids) and the one kernel that computes them
+    (similarity._lsh_columns), so stored and computed results agree. In
+    a real deployment this table is PARTITIONED BY ivf_cell (probe
+    filter = partition pruning) and bucketed on the sig columns.
 
     ``dims`` defaults to the DATA's vector length (one 1-row probe job
-    at build time): a hardcoded plane dimensionality silently poisons
-    the signatures of any other-width corpus (zip_with pads the missing
-    plane weights with NULL → aggregate → NULL → every CASE scores 0),
-    while the query side derives its planes from len(query_vec) — the
-    buckets would never line up and top-k would quietly collapse."""
-    import numpy as np
-    from pyspark.sql.types import StructType
-
+    at build time): a hardcoded plane dimensionality would give every
+    vector of another width a null signature, while the query side
+    derives its planes from len(query_vec) — the buckets would never
+    line up and top-k would quietly collapse."""
     # deliberately NO input spread here (unlike the minhash build): the
     # numpy kernel is milliseconds even single-core at bench scale, and
     # a spread input multiplies the partitionBy(ivf_cell) write of the
@@ -165,39 +100,15 @@ def build_embedding_signature_index(
         dims = int(row["d"]) if row is not None and row["d"] is not None else ANN_DIMS
     if centroids is None:
         centroids = S.ivf_centroids(emb, id_col, vec_col)
-    plane_mats = [
-        np.asarray(S.random_planes(dims, n_planes, seed + t), dtype=np.float64).T
-        for t in range(n_tables)
-    ]  # each (dims, n_planes)
-    bits = [np.int64(2**p) for p in range(n_planes)]
-    C = np.asarray(centroids, dtype=np.float64)
-    # sqrt(max(||c||², 1e-12)): the exact ivf_cell_sql clamp (greatest
-    # INSIDE the sqrt) — see assign_cells_vectorized
-    Cn = (C / np.sqrt(np.maximum((C * C).sum(axis=1), 1e-12))[:, None]).T
-
-    src = emb.select(id_col, vec_col)
-    schema = StructType(list(src.schema.fields))
-    for t in range(n_tables):
-        schema = schema.add(f"sig{t}", "long")
-    schema = schema.add("ivf_cell", "integer")
-
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf):
-                V = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                for t, P in enumerate(plane_mats):
-                    signs = (V @ P) >= 0  # (rows, n_planes)
-                    pdf[f"sig{t}"] = (signs * bits).sum(axis=1)
-                pdf["ivf_cell"] = (V @ Cn).argmax(axis=1).astype("int32") + 1
-            else:
-                for t in range(n_tables):
-                    pdf[f"sig{t}"] = np.array([], dtype=np.int64)
-                pdf["ivf_cell"] = np.array([], dtype=np.int32)
-            yield pdf
-
-    return src.mapInPandas(kernel, schema=schema)
+    return S._lsh_columns(
+        emb.select(id_col, vec_col),
+        vec_col,
+        {
+            f"sig{t}": S.random_planes(dims, n_planes, seed + t)
+            for t in range(n_tables)
+        },
+        ("ivf_cell", centroids),
+    )
 
 
 def _index_root(sf_dir: str) -> str:

@@ -5,7 +5,7 @@ Physical plan (see SURVEY.md §3.4):
     scan(docs)                         — Iceberg/parquet, column-pruned to
                                          the columns the parser needs
       → optional skew repartition      — hash(doc_id) + salt for mega-docs
-      → mapInPandas(extract_batch)     — P1-P12 + T1-T9 per Arrow batch,
+      → mapInArrow(extract_batch)      — P1-P12 + T1-T9 per Arrow batch,
                                          narrow (zero shuffle)
       → sink append + metrics          — per-partition lineage counters
 
@@ -299,24 +299,28 @@ def extract_batch_fn(config: SwishConfig, include_map: dict | None = None):
     return fn
 
 
-_PARSER_GUESS_CACHE: dict[tuple[int, str], str] = {}
+# value: (cfg, parser) — the cfg rides in the entry so its id cannot be
+# recycled by a later config while the entry is alive (Python workers
+# are reused across tasks, and each task unpickles a fresh config)
+_PARSER_GUESS_CACHE: dict[tuple[int, str], tuple[SwishConfig, str]] = {}
 
 
 def _guess_parser_cached(doc_id: str, cfg: SwishConfig) -> str:
     """Memoized ext→parser lookup for the kernel's per-row Python loop
     (_guess_parser is a pure function of (config, extension) —
     docinfo.c:202-258 ext → mime → parser). Size-capped so a pathological
-    extension corpus cannot grow executor memory unboundedly."""
+    extension corpus cannot grow executor memory unboundedly; a full
+    memo is emptied, which also frees the configs of finished tasks."""
     from libswish3_spark.parser import _guess_parser
 
     ext = doc_id.rsplit(".", 1)[-1].lower() if "." in doc_id else ""
     key = (id(cfg), ext)
     got = _PARSER_GUESS_CACHE.get(key)
     if got is None:
-        got = _guess_parser(doc_id, cfg)
-        if len(_PARSER_GUESS_CACHE) < 4096:
-            _PARSER_GUESS_CACHE[key] = got
-    return got
+        if len(_PARSER_GUESS_CACHE) >= 4096:
+            _PARSER_GUESS_CACHE.clear()
+        got = _PARSER_GUESS_CACHE[key] = (cfg, _guess_parser(doc_id, cfg))
+    return got[1]
 
 
 def extract(

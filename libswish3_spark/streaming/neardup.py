@@ -2,8 +2,8 @@
 
 The ingest-time twin of the batch minhash chain: each arriving
 document's band buckets are computed WITHIN the row (stateless — the
-same `functions.dedup.band_buckets` fold the batch path uses) and
-joined against the STATIC stored bucket index
+same `functions.dedup.doc_band_buckets` Arrow kernel the stored index
+is built with) and joined against the STATIC stored bucket index
 (operators/signatures.py). Spark executes the stream-static join
 without any streaming state: the static side is just re-planned per
 micro-batch, so the operator survives restarts for free and its cost
@@ -24,9 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from libswish3_spark.functions.dedup import band_buckets
-from libswish3_spark.functions.text import tokens
-from libswish3_spark.functions.dedup import shingles
+from libswish3_spark.functions.dedup import doc_band_buckets
 
 
 def swishdefault_text(docs: DataFrame, config=None) -> DataFrame:
@@ -53,11 +51,8 @@ def stream_band_buckets(
 ) -> DataFrame:
     """docs stream (doc_id, spans) → exploded (id, bucket) rows.
 
-    Stateless per-row fold + explode — no watermark, no state store.
-    Batch invocations get the same exchange barrier `doc_band_buckets`
-    uses (without it ColumnPruning inlines the hash chain into
-    Generate's interpreted eval, ~3× the projection); per-micro-batch
-    volumes are small enough that the stream path skips it.
+    Stateless per-row kernel (`doc_band_buckets`) — no watermark, no
+    state store; batch and stream inputs take the same plan.
 
     The bucketed text MUST match what the index was built from:
 
@@ -83,17 +78,7 @@ def stream_band_buckets(
             ),
             " ",
         )
-    packed = src.select(
-        ident.alias("id"),
-        band_buckets(shingles(tokens(text))).alias("bks"),
-    )
-    if not docs.isStreaming:
-        packed = packed.repartition("id")
-    # outer + null filter: a plain explode's inferred size()>0 predicate
-    # sinks the signature chain into the scan (see doc_band_buckets)
-    return packed.select("id", F.explode_outer("bks").alias("bucket")).where(
-        F.col("bucket").isNotNull()
-    )
+    return doc_band_buckets(src.select(ident.alias("id"), text.alias("_t")), "id", "_t")
 
 
 def near_dup_stream(

@@ -229,3 +229,27 @@ def test_include_config_merges_flags_and_continues_ids():
     ids = [m.id for m in cfg.metanames.values()]
     assert len(set(ids)) == len(ids)  # no silent id collision
     assert {"fromparent", "frominclude"} <= set(cfg.metanames)
+
+
+def test_parser_guess_memo_survives_config_id_reuse():
+    """The ext → parser memo must answer for the config it is asked
+    about. Python workers are reused across tasks and each task
+    unpickles a fresh config, so CPython can hand a new config the
+    address of a freed one; a memo keyed on that id alone then serves
+    the freed config's answer."""
+    from libswish3_spark.pipeline import _guess_parser_cached
+
+    xml_as_txt = {
+        **default_config().parsers,
+        "application/xml": "TXT",
+        "text/xml": "TXT",
+    }
+    stale = 0
+    for _ in range(200):
+        alt = default_config(parsers=dict(xml_as_txt))
+        assert _guess_parser_cached("doc.xml", alt) == "TXT"
+        del alt
+        cfg = default_config()
+        stale += _guess_parser_cached("doc.xml", cfg) != "XML"
+        del cfg
+    assert stale == 0

@@ -43,10 +43,8 @@ def test_tokens_and_quality(spark, docs):
 
 def test_shingles_short_doc_empty(spark, docs):
     out = {
-        x["doc_id"]: x["sh"]
-        for x in docs.select(
-            "doc_id", D.shingles(T.tokens(F.col("text"))).alias("sh")
-        ).collect()
+        x["id"]: x["sh"]
+        for x in D.shingle_arrays_vectorized(docs, "doc_id", "text").collect()
     }
     assert out[5] == [] and out[6] == []  # < n tokens → empty, not [0,-1] junk
     assert "the cat sat" in out[1]
@@ -64,8 +62,16 @@ def test_minhash_finds_near_dups(spark, docs):
     assert (1, 4) not in pairs and (2, 4) not in pairs
 
 
+def _all_pairs(df):
+    """Every (a, b) pair of distinct doc ids, a < b: candidates that
+    make jaccard_verify score the whole corpus (tests only)."""
+    ids = df.select(F.col("doc_id").alias("a"))
+    return ids.crossJoin(ids.select(F.col("a").alias("b"))).where("a < b")
+
+
 def test_jaccard_scores(spark, docs):
-    rows = {(r["a"], r["b"]): r["jaccard_bp"] for r in D.ngram_jaccard_pairs(docs, "doc_id", "text", 0.1).collect()}
+    scored = D.jaccard_verify(docs, _all_pairs(docs), "doc_id", "text", 0.1)
+    rows = {(r["a"], r["b"]): r["jaccard_bp"] for r in scored.collect()}
     assert rows[(1, 2)] == 10000  # identical shingle sets
     assert 0 < rows[(1, 3)] < 10000
 
@@ -102,7 +108,7 @@ def test_resolve_clusters_integer_chain_converges(spark):
     assert got == {i: 0 for i in range(12)}
 
 
-def test_resolve_clusters_local_and_distributed_agree(spark):
+def test_resolve_clusters_local_and_distributed_agree(spark, monkeypatch):
     """The size-gated driver union-find and the doubling loop must
     produce identical labels (string ids included: Spark compares
     UTF8 bytes, Python code points — identical order by UTF-8's
@@ -112,17 +118,9 @@ def test_resolve_clusters_local_and_distributed_agree(spark):
         ["a", "b"],
     )
     local = {r["doc_id"]: r["keeper"] for r in D.resolve_clusters(pairs).collect()}
-    old = spark.conf.get("spark.libswish3.cc.localEdgeLimit", None)
-    spark.conf.set("spark.libswish3.cc.localEdgeLimit", "0")
-    try:
-        dist = {
-            r["doc_id"]: r["keeper"] for r in D.resolve_clusters(pairs).collect()
-        }
-    finally:
-        if old is None:
-            spark.conf.unset("spark.libswish3.cc.localEdgeLimit")
-        else:
-            spark.conf.set("spark.libswish3.cc.localEdgeLimit", old)
+    # a zero driver share forces the distributed doubling loop
+    monkeypatch.setattr(D, "_LOCAL_CC_MEMORY_SHARE", 0)
+    dist = {r["doc_id"]: r["keeper"] for r in D.resolve_clusters(pairs).collect()}
     assert local == dist
     assert local["d1"] == "d1" and local["d2"] == "d1" and local["d5"] == "d1"
     assert local["a"] == "a" and local["é"] == "a" and local["zz"] == "a"
@@ -574,7 +572,7 @@ def test_cap_drop_metrics_planted_hot_bucket(spark):
     assert (z["dropped_buckets"], z["dropped_rows"]) == (0, 0)
 
 
-def test_resolve_clusters_long_chain_converges(spark):
+def test_resolve_clusters_long_chain_converges(spark, monkeypatch):
     """Pointer doubling: a pure chain of 25 nodes (diameter 24) must
     resolve every node to keeper 'n00' well within the default round
     budget (plain propagation would need 24 rounds)."""
@@ -583,27 +581,19 @@ def test_resolve_clusters_long_chain_converges(spark):
     pairs = spark.createDataFrame(
         [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(24)], ["a", "b"]
     )
-    # force the distributed loop: 48 directed edges are under the
-    # driver union-find's edge limit
-    old = spark.conf.get("spark.libswish3.cc.localEdgeLimit", None)
-    spark.conf.set("spark.libswish3.cc.localEdgeLimit", "0")
-    try:
-        with warnings.catch_warnings():
-            warnings.simplefilter("error")
-            out = {
-                r["doc_id"]: r["keeper"]
-                for r in D.resolve_clusters(pairs, max_rounds=8).collect()
-            }
-    finally:
-        if old is None:
-            spark.conf.unset("spark.libswish3.cc.localEdgeLimit")
-        else:
-            spark.conf.set("spark.libswish3.cc.localEdgeLimit", old)
+    # force the distributed loop: 24 pairs fit the driver union-find
+    monkeypatch.setattr(D, "_LOCAL_CC_MEMORY_SHARE", 0)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = {
+            r["doc_id"]: r["keeper"]
+            for r in D.resolve_clusters(pairs, max_rounds=8).collect()
+        }
     assert len(out) == 25
     assert set(out.values()) == {"n00"}
 
 
-def test_resolve_clusters_nonconvergence_is_signaled(spark):
+def test_resolve_clusters_nonconvergence_is_signaled(spark, monkeypatch):
     """Hitting max_rounds without a fixpoint must warn (or raise with
     require_converged) — never return silently-wrong keepers."""
     import warnings
@@ -613,16 +603,13 @@ def test_resolve_clusters_nonconvergence_is_signaled(spark):
     )
     # force the distributed loop — the size-gated driver union-find
     # needs no rounds and cannot fail to converge
-    spark.conf.set("spark.libswish3.cc.localEdgeLimit", "0")
-    try:
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            D.resolve_clusters(pairs, max_rounds=1)
-        assert any("fixpoint" in str(w.message) for w in caught)
-        with pytest.raises(ValueError, match="fixpoint"):
-            D.resolve_clusters(pairs, max_rounds=1, require_converged=True)
-    finally:
-        spark.conf.unset("spark.libswish3.cc.localEdgeLimit")
+    monkeypatch.setattr(D, "_LOCAL_CC_MEMORY_SHARE", 0)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        D.resolve_clusters(pairs, max_rounds=1)
+    assert any("fixpoint" in str(w.message) for w in caught)
+    with pytest.raises(ValueError, match="fixpoint"):
+        D.resolve_clusters(pairs, max_rounds=1, require_converged=True)
 
 
 def test_drop_frequent_paragraphs(spark):
@@ -739,10 +726,14 @@ def test_minhash_recall_on_planted_near_dups(spark):
             df, D.minhash_candidates(df, "doc_id", "text"), "doc_id", "text", 0.5
         ).collect()
     }
-    # ground truth at the same threshold via the (test-only) all-pairs path
+    # ground truth at the same threshold: every pair scored in Python
+    sets = {i: set(D.ascii_shingles(t)) for i, t in rows}
     true_pairs = {
-        (r["a"], r["b"])
-        for r in D.ngram_jaccard_pairs(df, "doc_id", "text", 0.5).collect()
+        (a, b)
+        for a in sets
+        for b in sets
+        if a < b
+        and len(sets[a] & sets[b]) * 10000 // len(sets[a] | sets[b]) >= 5000
     }
     assert true_pairs  # the planting produced real near-dups
     recall = len(verified & true_pairs) / len(true_pairs)
@@ -876,9 +867,8 @@ def test_jaccard_verify_empty_shingles_no_divide_by_zero(spark):
 
 def test_jaccard_threshold_is_rounded_not_truncated(spark):
     """A pair scoring exactly 5699 bp (110 shared of 193 distinct
-    3-grams) fails a 0.57 threshold and passes 0.5699, in both the
-    candidate-gated verify and the all-pairs form (int(0.57 * 10000)
-    is 5699, which used to let it through)."""
+    3-grams) fails a 0.57 threshold and passes 0.5699 (int(0.57 *
+    10000) is 5699, which used to let it through)."""
     common = [f"c{i}" for i in range(112)]  # 110 shared 3-grams
     docs = spark.createDataFrame(
         [
@@ -888,12 +878,12 @@ def test_jaccard_threshold_is_rounded_not_truncated(spark):
         ["doc_id", "text"],
     )
     cand = spark.createDataFrame([(1, 2)], ["a", "b"])
-    for score in (
-        lambda t: D.jaccard_verify(docs, cand, "doc_id", "text", threshold=t),
-        lambda t: D.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=t),
-    ):
-        assert score(0.57).collect() == []
-        assert [r["jaccard_bp"] for r in score(0.5699).collect()] == [5699]
+
+    def score(t):
+        return D.jaccard_verify(docs, cand, "doc_id", "text", threshold=t)
+
+    assert score(0.57).collect() == []
+    assert [r["jaccard_bp"] for r in score(0.5699).collect()] == [5699]
 
 
 def _reference_candidate_pairs(rows, max_bucket, pairs):
@@ -956,7 +946,7 @@ def test_media_features_defaults_missing_columns(spark):
 
 
 def test_candidate_pairs_auto_mode_clone_families(spark):
-    """VERDICT r5 scale-default: 'auto' emits O(n) star edges for
+    """The scale default 'auto' emits O(n) star edges for
     clone-family buckets (above STAR_THRESHOLD members) and full
     all-pairs for ordinary buckets, with resolved clusters identical
     to all-pairs on the clone families."""
