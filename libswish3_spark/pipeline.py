@@ -7,7 +7,8 @@ Physical plan (see SURVEY.md §3.4):
       → optional skew repartition      — hash(doc_id) + salt for mega-docs
       → mapInArrow(extract_batch)      — P1-P12 + T1-T9 per Arrow batch,
                                          narrow (zero shuffle)
-      → sink append + metrics          — per-partition lineage counters
+      → sink append                    — checkpoint.py counts its manifest
+                                         in the write's kernel tasks
 
 The whole extraction is a narrow map: Catalyst prunes and pushes down
 around it, AQE handles post-shuffle sizing for downstream aggs, and the
@@ -351,15 +352,26 @@ def extract(
       are never touched.
     """
     cfg = config or default_config()
-    cols = [c for c in _EXTRACT_COLS if c in docs.columns]
-    pruned = docs.select(*cols)  # column pruning reaches the scan
-    if salt_partitions:
-        pruned = salt_by_size(pruned, salt_partitions)
-    elif spread and not docs.isStreaming:
-        pruned = ensure_parallelism(pruned)
-    return pruned.mapInArrow(
+    return _kernel_input(docs, salt_partitions, spread).mapInArrow(
         extract_batch_fn(cfg, include_map), schema=EXTRACTED_SCHEMA
     )
+
+
+def _kernel_input(
+    docs: DataFrame,
+    salt_partitions: int | None = None,
+    spread: bool = True,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """``docs`` pruned to the kernel's columns plus ``keep``, then salted
+    or spread as :func:`extract` documents."""
+    cols = [c for c in [*_EXTRACT_COLS, *keep] if c in docs.columns]
+    pruned = docs.select(*cols)  # column pruning reaches the scan
+    if salt_partitions:
+        return salt_by_size(pruned, salt_partitions)
+    if spread and not docs.isStreaming:
+        return ensure_parallelism(pruned)
+    return pruned
 
 
 def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
@@ -429,11 +441,15 @@ def salt_by_size(docs: DataFrame, num_partitions: int) -> DataFrame:
 
 
 def extraction_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage + counter metrics (A4; reference:
-    swish_lint.c:50,152 files/twords counters).
+    """Docs, words, spans and error rows per ``spark_partition_id()`` of
+    ``extracted`` (A4; reference: swish_lint.c:50,152 files/twords
+    counters), in one partial-aggregated pass.
 
-    One partial-aggregated pass; written alongside the output table so a
-    resume can reconcile what each partition produced.
+    The partition is the split of the plan that computes ``extracted``.
+    For a re-read of written output that is the read-time file split,
+    not the task that extracted the rows, so this is no lineage record.
+    Resume never reads it: ``plans/checkpoint.py`` resumes from its
+    bucket manifest.
     """
     return (
         extracted.groupBy(F.spark_partition_id().alias("partition_id"))

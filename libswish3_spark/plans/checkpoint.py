@@ -7,13 +7,18 @@ partition manifests. Mechanism:
 * each completed chunk of buckets writes its rows to the output
   (partitioned by bucket), then appends ``(bucket, docs, words, errors,
   run_id, num_buckets)`` per bucket to a manifest table — the manifest
-  is written only *after* the data, from one read-back job over the
-  just-written files, so a crash can at worst leave a bucket's data
-  present but unrecorded;
+  is written only *after* the data, so a crash can at worst leave a
+  bucket's data present but unrecorded. Its counts come from counters
+  the data write's own kernel tasks keep (see :func:`run_extraction`),
+  not from a second job over the written files;
 * resume = one existence probe of the manifest and, if present, one read
   of it for the done-set; only the missing buckets are processed, and
   their output directories are rewritten (dynamic partition overwrite),
   which makes the data+manifest pair idempotent per bucket.
+
+The module needs a classic (non-Connect) session: the existence probe
+goes through the JVM and the counters are Python accumulators, neither
+of which Spark Connect offers.
 
 This is the batch analogue of Structured Streaming's checkpoint (see
 ``libswish3_spark.streaming``), usable where the input is a static
@@ -24,10 +29,31 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
+import pyarrow as pa
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from libswish3_spark.config import SwishConfig
-from libswish3_spark.pipeline import extract
+from libswish3_spark.config import SwishConfig, default_config
+from libswish3_spark.pipeline import EXTRACTED_SCHEMA, _kernel_input, extract_batch_fn
+
+# a resume reads every part file a manifest ever got as one table: keep
+# these types and non-null columns, which older part files have too
+_MANIFEST = pa.schema(
+    [
+        pa.field("bucket", pa.int32(), nullable=False),
+        pa.field("docs", pa.int64(), nullable=False),
+        pa.field("words", pa.int64(), nullable=False),
+        pa.field("errors", pa.int64(), nullable=False),
+        pa.field("run_id", pa.string(), nullable=False),
+        pa.field("num_buckets", pa.int32(), nullable=False),
+    ]
+)
+# a new StructType: EXTRACTED_SCHEMA.add() would mutate the shared schema
+_BUCKETED_SCHEMA = StructType(
+    EXTRACTED_SCHEMA.fields + [StructField("bucket", IntegerType())]
+)
 
 
 def with_bucket(docs: DataFrame, num_buckets: int) -> DataFrame:
@@ -95,9 +121,9 @@ def run_extraction(
     one pass): the bucket predicate is a computed hash, so it cannot be
     pushed down to the scan, and a per-bucket loop would re-read the
     whole input once per bucket — O(B × full-scan) at 10^12 docs. One
-    chunk = one input scan, one dynamic-partition write, then one
-    read-back job that appends the chunk's manifest rows as one file;
-    the commit point stays manifest-after-data, at chunk granularity.
+    chunk = one input scan and one dynamic-partition write, then one
+    small append of the chunk's manifest rows as one file; the commit
+    point stays manifest-after-data, at chunk granularity.
     ``buckets_per_pass`` bounds how much work a driver crash can lose
     (e.g. 64 over 10k buckets runs ~160 scans, each committed, losing at
     most 0.6% of the run on a crash) — ALL chunks run in this call.
@@ -105,6 +131,15 @@ def run_extraction(
     simulate a died run with ``max_passes=1``; an earlier form silently
     did this whenever buckets_per_pass was set, leaving 99.4% of the
     corpus unprocessed for a caller who followed the docstring).
+
+    The manifest's docs, words and errors (rows with a non-null
+    ``error``) are counted by the kernel's tasks as they emit the rows,
+    into one accumulator per chunk. They are exact: nothing shuffles
+    after the kernel, so it runs in the write's result stage, and Spark
+    applies a result task's accumulator update only for the first
+    successful attempt of each partition — the attempt whose files were
+    committed. Failed and speculative attempts add nothing, whatever
+    shuffles (input spread, salting, an XInclude join) run upstream.
     """
     manifest_path = os.path.join(output_path, "_manifest")
     data_path = os.path.join(output_path, "data")
@@ -115,46 +150,74 @@ def run_extraction(
     chunks = [todo[i : i + step] for i in range(0, len(todo), step)]
     if max_passes is not None:
         chunks = chunks[:max_passes]
+    kernel = extract_batch_fn(config or default_config(), include_map)
 
     processed = []
     for chunk in chunks:
-        part = bucketed.where(F.col("bucket").isin(chunk)).drop("bucket")
-        out = extract(part, config=config, include_map=include_map)
-        # bucket is a deterministic function of doc_id: recompute after
-        # the (column-pruned) extraction instead of threading it through
-        out = with_bucket(out, num_buckets)
+        part = bucketed.where(F.col("bucket").isin(chunk))
+        acc = spark.sparkContext.accumulator(
+            np.zeros((3, len(chunk)), np.int64), _Counts()
+        )
+        out = _kernel_input(part, keep=("bucket",)).mapInArrow(
+            _counted(kernel, chunk, acc), schema=_BUCKETED_SCHEMA
+        )
         # data first, manifest second: the commit point is the manifest
         out.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("bucket").parquet(data_path)
-        # stats come from the JUST-WRITTEN parquet (partition-pruned to
-        # this chunk), not from `out` — re-aggregating the uncached
-        # extract lineage would run the whole Python parse kernel a
-        # second time per chunk, doubling the dominant cost at scale.
-        # The explicit schema skips footer inference; the left join from
-        # the chunk's bucket list gives empty buckets their zero rows.
-        stats = (
-            spark.read.schema("nwords long, error string, bucket int")
-            .parquet(data_path)
-            .where(F.col("bucket").isin(chunk))
-            .groupBy("bucket")
-            .agg(
-                F.count("*").alias("docs"),
-                F.sum("nwords").alias("words"),
-                F.count("error").alias("errors"),
-            )
+        n = len(chunk)
+        manifest = pa.table(
+            [chunk, *acc.value, [run_id] * n, [num_buckets] * n], schema=_MANIFEST
         )
-        buckets = spark.range(1).select(
-            F.explode(F.array(*[F.lit(b) for b in chunk])).alias("bucket")
+        # built from Arrow: from a list of tuples it goes through a pickled
+        # Python RDD (0.7-1 s for 16 rows), and literal struct rows cost
+        # one Py4J call per value (~0.3 s for 16 rows)
+        spark.createDataFrame(manifest).coalesce(1).write.mode("append").parquet(
+            manifest_path
         )
-        buckets.join(stats, "bucket", "left").select(
-            "bucket",
-            *[F.coalesce(c, F.lit(0)).alias(c) for c in ("docs", "words", "errors")],
-            F.lit(run_id).alias("run_id"),
-            F.lit(num_buckets).alias("num_buckets"),
-        ).coalesce(1).write.mode("append").parquet(manifest_path)
         processed.extend(chunk)
     return {"processed": processed, "skipped": sorted(done)}
+
+
+class _Counts(AccumulatorParam):
+    """Element-wise sum of int64 arrays."""
+
+    def zero(self, value):
+        return np.zeros_like(value)
+
+    def addInPlace(self, value1, value2):
+        value1 += value2
+        return value1
+
+
+def _counted(kernel, chunk: list[int], acc):
+    """``kernel`` wrapped to pass each row's ``bucket`` through and to
+    add per-bucket ``(docs, words, errors)`` to ``acc`` as a (3, len(chunk))
+    array once the partition ends. The kernel emits one output batch,
+    row for row, per input batch."""
+    buckets = np.asarray(chunk)  # ascending: todo is
+
+    def fn(batches):
+        counts = np.zeros((3, len(chunk)), np.int64)
+        held = []
+
+        def stripped():
+            for batch in batches:
+                i = batch.schema.get_field_index("bucket")
+                held.append(batch.column(i))
+                yield batch.drop_columns(["bucket"])
+
+        for out in kernel(stripped()):
+            bucket = held.pop(0)
+            slot = np.searchsorted(buckets, bucket.to_numpy())
+            errors = out.column("error").is_valid()
+            np.add.at(counts[0], slot, 1)
+            np.add.at(counts[1], slot, out.column("nwords").to_numpy())
+            np.add.at(counts[2], slot, errors.to_numpy(zero_copy_only=False))
+            yield out.append_column("bucket", bucket)
+        acc.add(counts)
+
+    return fn
 
 
 def read_extracted(spark: SparkSession, output_path: str) -> DataFrame:

@@ -10,9 +10,12 @@
         [--minhash-index s3://bucket/minhash_buckets/]
 
 Batch mode resumes idempotently from the output's bucket manifest
-(plans/checkpoint.py); streaming mode resumes from the sink checkpoint.
-Per-partition lineage metrics are rewritten from the materialized
-output next to it either way (overwrite — re-deriving is idempotent). Package the library with ``zip -r libswish3_spark.zip
+(plans/checkpoint.py), whose per-bucket docs, words and errors the data
+write's kernel tasks count as they emit the rows; streaming mode resumes
+from the sink checkpoint. Batch mode then rewrites ``_metrics`` next to
+the output: counts per read split of the whole written output
+(overwrite, so re-deriving on a resume is idempotent). Resume never
+reads it. Package the library with ``zip -r libswish3_spark.zip
 libswish3_spark`` (pure Python, no native deps).
 """
 
@@ -106,7 +109,7 @@ def main(argv=None) -> int:
     # materialized output, so a resumed run re-deriving them is
     # idempotent — appending re-added rows for every previously
     # completed bucket on each resume, double-counting docs/words/
-    # errors in the lineage table
+    # errors in the table
     extraction_metrics(extracted).write.mode("overwrite").parquet(
         os.path.join(args.output, "_metrics")
     )

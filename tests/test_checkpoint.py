@@ -1,10 +1,13 @@
 """run_extraction's checkpoint contract on synthetic HTML documents:
-resume, the manifest's per-bucket rows, the bucket-count guard,
-idempotent reruns, and the session the call leaves behind."""
+resume, the manifest's per-bucket rows (also under task retries), the
+bucket-count guard, idempotent reruns, and the session the call leaves
+behind."""
 
 import glob
 import os
 import shutil
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -35,6 +38,23 @@ def _manifest_files(out):
     return glob.glob(os.path.join(out, "_manifest", "part-*"))
 
 
+def _grouped_data(spark, out, buckets, run_id="run0", num_buckets=8):
+    """The manifest rows ``buckets`` should have: the written data
+    grouped by bucket, zero rows for empty buckets."""
+    grouped = {
+        r["bucket"]: (r["docs"], r["words"], r["errors"])
+        for r in cp.read_extracted(spark, out)
+        .groupBy("bucket")
+        .agg(
+            F.count("*").alias("docs"),
+            F.sum("nwords").alias("words"),
+            F.count("error").alias("errors"),
+        )
+        .collect()
+    }
+    return [(b, *grouped.get(b, (0, 0, 0)), run_id, num_buckets) for b in sorted(buckets)]
+
+
 def test_resume_after_a_died_pass(spark, tmp_path):
     out = str(tmp_path / "x")
     docs = _docs(spark)
@@ -59,22 +79,117 @@ def test_manifest_rows_are_the_data_grouped_by_bucket(spark, tmp_path):
     groupBy of the written data, the empty ones get zero rows."""
     out = str(tmp_path / "x")
     cp.run_extraction(spark, _docs(spark, 3), out, num_buckets=8, run_id="r")
-    grouped = {
-        r["bucket"]: (r["docs"], r["words"], r["errors"])
-        for r in cp.read_extracted(spark, out)
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum("nwords").alias("words"),
-            F.count("error").alias("errors"),
-        )
-        .collect()
-    }
-    assert sum(d for d, _, _ in grouped.values()) == 3
-    assert sum(e for _, _, e in grouped.values()) == 1  # doc 0
-    assert _manifest_rows(spark, out) == [
-        (b, *grouped.get(b, (0, 0, 0)), "r", 8) for b in range(8)
+    want = _grouped_data(spark, out, range(8), run_id="r")
+    assert sum(r[1] for r in want) == 3
+    assert sum(r[3] for r in want) == 1  # doc 0
+    assert _manifest_rows(spark, out) == want
+
+
+def test_each_pass_counts_only_its_own_buckets(spark, tmp_path):
+    """Three passes over 8 buckets: each pass's manifest file holds
+    exactly its chunk's rows, equal to a groupBy of the data, so no
+    count carries over from one chunk to the next."""
+    out = str(tmp_path / "x")
+    r = cp.run_extraction(spark, _docs(spark), out, num_buckets=8, buckets_per_pass=3)
+    assert r["processed"] == list(range(8))
+    files = _manifest_files(out)
+    assert len(files) == 3
+    want = _grouped_data(spark, out, range(8))
+    got = []
+    for f in files:
+        rows = sorted(tuple(x) for x in spark.read.parquet(f).select(*MANIFEST).collect())
+        assert [x[0] for x in rows] in ([0, 1, 2], [3, 4, 5], [6, 7])
+        got += rows
+    assert sorted(got) == want
+
+
+def test_manifest_part_file_schema(spark, tmp_path):
+    """Manifest part files keep one exact schema, so manifests appended
+    across versions and resumes read as one table."""
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "x")
+    cp.run_extraction(spark, _docs(spark, 20), out, num_buckets=4)
+    (f,) = _manifest_files(out)
+    assert spark.read.parquet(f).schema.simpleString() == (
+        "struct<bucket:int,docs:bigint,words:bigint,errors:bigint,"
+        "run_id:string,num_buckets:int>"
+    )
+    assert [(c.name, str(c.type), c.nullable) for c in pq.read_schema(f)] == [
+        ("bucket", "int32", False),
+        ("docs", "int64", False),
+        ("words", "int64", False),
+        ("errors", "int64", False),
+        ("run_id", "string", False),
+        ("num_buckets", "int32", False),
     ]
+
+
+def test_extracted_schema_unchanged(spark, tmp_path):
+    from libswish3_spark import pipeline
+
+    before = pipeline.EXTRACTED_SCHEMA.json()
+    cp.run_extraction(spark, _docs(spark, 10), str(tmp_path / "x"), num_buckets=2)
+    assert pipeline.EXTRACTED_SCHEMA.json() == before
+    assert "bucket" not in pipeline.EXTRACTED_SCHEMA.fieldNames()
+
+
+# A session of its own with two task attempts per task. The upstream
+# mapInArrow runs in the same (result) stage as the kernel, since the
+# input has more files than slots and so is not spread; on each task's
+# first attempt it passes one batch on, leaves a marker and raises.
+_RETRY_SCRIPT = """
+import os, sys
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+from libswish3_spark.plans.checkpoint import run_extraction
+
+src, out, marks = sys.argv[1:]
+spark = (
+    SparkSession.builder.master("local[2,2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10")
+    .getOrCreate()
+)
+spark.sparkContext.setLogLevel("OFF")
+
+def flaky(batches):
+    ctx = TaskContext.get()
+    for i, batch in enumerate(batches):
+        if i == 1 and ctx.attemptNumber() == 0:
+            open(os.path.join(marks, str(ctx.partitionId())), "w").close()
+            raise RuntimeError("injected failure")
+        yield batch
+
+docs = spark.read.parquet(src)
+run_extraction(spark, docs.mapInArrow(flaky, docs.schema), out, num_buckets=8)
+spark.stop()
+"""
+
+
+def test_manifest_exact_under_task_retries(spark, tmp_path):
+    """Every task's first attempt fails partway through its partition:
+    the manifest still equals the written data grouped by bucket, and
+    counts each input document once."""
+    src, out, marks = (str(tmp_path / d) for d in ("in", "out", "marks"))
+    os.makedirs(marks)
+    docs = _docs(spark)
+    n = docs.count()
+    docs.repartition(4).write.parquet(src)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [root, env.get("PYTHONPATH")]))
+    r = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, src, out, marks],
+        env=env,
+        capture_output=True,
+        timeout=300,
+    )
+    assert r.returncode == 0, r.stderr.decode()[-3000:]
+    assert len(os.listdir(marks)) >= 2  # the failures did happen
+    rows = _manifest_rows(spark, out)
+    assert rows == _grouped_data(spark, out, range(8))
+    assert sum(row[1] for row in rows) == n
 
 
 def test_bucket_count_change_raises(spark, tmp_path):
