@@ -8,12 +8,15 @@ stage has an independent SQL oracle. Scale notes per operator:
 * exact        — one hash-groupBy shuffle on the digest; partial agg
                  map-side, skew-free (digests are uniform).
 * minhash LSH  — text → shingles → k minhashes → b band buckets, all
-                 computed WITHIN each row by one Arrow batch kernel
-                 (zero shuffle until the candidate join); bucket sizes
-                 are capped so a boilerplate-heavy bucket cannot go
-                 quadratic.
-* jaccard      — exact verification ON LSH CANDIDATE PAIRS ONLY (two
-                 linear joins + an array_intersect per pair).
+                 computed by one Arrow batch kernel (zero shuffle until
+                 the candidate join); bucket sizes are capped so a
+                 boilerplate-heavy bucket cannot go quadratic.
+* jaccard      — exact verification ON LSH CANDIDATE PAIRS ONLY: the
+                 documents are scanned again and their [doc_id, text]
+                 rows shuffle to semi-join the candidate ids; the
+                 shingle kernel runs once per gated document and its
+                 arrays shuffle once; two linear joins + an
+                 array_intersect per pair.
 * resolve      — min-id label propagation over verified pairs →
                  (doc_id, keeper) cluster assignment, bounded rounds
                  with per-round lineage truncation.
@@ -37,6 +40,8 @@ from __future__ import annotations
 import hashlib
 import re
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from libswish3_spark.functions.text import fingerprint, tokens
@@ -77,34 +82,76 @@ def ascii_shingles(text, n: int = 3) -> list[str]:
     return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
 
 
-def _band_keys(text) -> list[str]:
-    """The MINHASH_BANDS LSH bucket keys of one document; empty when it
-    has no 3-gram shingle, so shingle-less docs never bucket-collide.
+# shingles per min-fold: bounds the distinct-shingle table and the
+# gathered (shingles, K) uint32 array to tens of MB, however many long
+# documents an Arrow batch holds (a single document is never split)
+_FOLD_SHINGLES = 1 << 17
+
+
+def _band_bucket_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
+    """(id, bucket) rows of one Arrow batch of (id, text): the
+    MINHASH_BANDS LSH bucket keys of every document with at least one
+    3-gram shingle, so shingle-less docs never bucket-collide (and emit
+    no row). Documents are folded in runs of about
+    :data:`_FOLD_SHINGLES` shingles (:func:`_fold_band_keys`)."""
+    keep: list[int] = []  # batch positions of documents with shingles
+    buckets: list[str] = []
+    slot: dict[str, int] = {}  # distinct shingle -> its row of digests
+    rows: list[int] = []  # slot of every shingle, documents in order
+    starts: list[int] = []  # first entry in rows of each document
+    for i, text in enumerate(batch.column(1).to_pylist()):
+        grams = ascii_shingles(text)
+        if not grams:
+            continue
+        keep.append(i)
+        starts.append(len(rows))
+        rows += [slot.setdefault(g, len(slot)) for g in grams]
+        if len(rows) >= _FOLD_SHINGLES:
+            buckets += _fold_band_keys(slot, rows, starts)
+            slot, rows, starts = {}, [], []
+    if starts:
+        buckets += _fold_band_keys(slot, rows, starts)
+    ids = batch.column(0).take(np.repeat(np.asarray(keep, np.int64), MINHASH_BANDS))
+    return pa.RecordBatch.from_arrays(
+        [ids, pa.array(buckets, pa.string())], names=["id", "bucket"]
+    )
+
+
+def _fold_band_keys(slot: dict, rows: list[int], starts: list[int]) -> list[str]:
+    """The band keys of a run of documents, MINHASH_BANDS per document
+    in order: ``slot`` numbers the run's distinct shingles, ``rows``
+    lists the slot of every shingle, and document d's shingles start at
+    ``rows[starts[d]]``.
 
     Hash j of a shingle is the 8-hex-char slice j%4 of
     md5(shingle || '#' || j//4) — one md5 yields four 32-bit hash
     values, so K=16 costs 4 digests per shingle. Each of the K minhashes
-    is the least slice over the shingles (fixed-width hex: string order
-    is numeric order), and band b's key is md5('b|mh_{br}|...|mh_{br+r-1}').
+    is the least slice over the document's shingles, and band b's key is
+    md5('b|mh_{br}|...|mh_{br+r-1}'). Each distinct shingle is hashed
+    once (documents share n-grams: 37-39% of the shingles repeat within
+    a batch of a few hundred documents, both of the bench corpus and of
+    clone-family text). The digests, viewed as big-endian uint32 (a fixed-width
+    lowercase hex slice orders like its number), are gathered per
+    shingle and min-folded per document by one ``np.minimum.reduceat``;
+    ``f"{v:08x}"`` gives back the slice.
     """
-    grams = ascii_shingles(text)
-    if not grams:
-        return []
     k, r = MINHASH_K, MINHASH_K // MINHASH_BANDS
     md5 = hashlib.md5
-    mins = None
-    for gram in grams:
-        g = gram.encode("utf-8")
-        vals = []
-        for gg in range((k + 3) // 4):
-            h = md5(g + b"#" + str(gg).encode()).hexdigest()
-            vals += [h[0:8], h[8:16], h[16:24], h[24:32]]
-        vals = vals[:k]
-        mins = vals if mins is None else [a if a < b else b for a, b in zip(mins, vals)]
-    return [
-        md5("|".join([str(b)] + mins[b * r : (b + 1) * r]).encode()).hexdigest()
-        for b in range(MINHASH_BANDS)
-    ]
+    salts = [b"#%d" % g for g in range((k + 3) // 4)]
+    digests = bytearray()
+    for gram in slot:
+        g = gram.encode()
+        for salt in salts:
+            digests += md5(g + salt).digest()
+    hashes = np.frombuffer(digests, ">u4").reshape(len(slot), -1)[:, :k]
+    keys = []
+    for doc in np.minimum.reduceat(hashes[rows], starts, axis=0).tolist():
+        hx = [f"{v:08x}" for v in doc]
+        keys += [
+            md5("|".join([str(b)] + hx[b * r : (b + 1) * r]).encode()).hexdigest()
+            for b in range(MINHASH_BANDS)
+        ]
+    return keys
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -124,30 +171,25 @@ def doc_band_buckets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     every document with at least one 3-gram shingle.
 
     The whole chain — tokenize → 3-gram shingles → 4 md5 per shingle →
-    16 min-folds → 8 band keys → explode — runs in ONE Arrow batch
-    kernel (:func:`_band_keys` per row): hashlib's C md5 plus plain
-    Python min-folds beat the JVM's per-element interpretation of
-    equivalent nested lambda expressions several-fold (232 s
-    interpreted for 1.28 M docs). The output equals the DuckDB spec
-    ``ORACLE_MINHASH_BUCKET_INDEX`` (pinned by pytest over the bench
-    corpus plus edge documents)."""
+    16 min-folds → 8 band keys → explode — runs in ONE ``mapInArrow``
+    kernel, a batch at a time (:func:`_band_bucket_batch`): hashlib's C
+    md5 over the batch's distinct shingles, then one numpy min-fold per
+    document over the digests viewed as uint32. This beats the JVM's
+    per-element interpretation of equivalent nested lambda expressions
+    several-fold (232 s interpreted for 1.28 M docs), and a per-row
+    Python min-fold over hex strings about 2-5x. The output equals the
+    DuckDB spec ``ORACLE_MINHASH_BUCKET_INDEX`` (pinned by pytest over
+    the bench corpus plus edge documents, and per batch)."""
     from pyspark.sql.types import StructType
 
     src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
     schema = StructType([src.schema.fields[0]]).add("bucket", "string")
 
-    def kernel(batches):
-        import pandas as pd
+    def band_bucket_kernel(batches):
+        for batch in batches:
+            yield _band_bucket_batch(batch)
 
-        for pdf in batches:
-            ids, buckets = [], []
-            for did, text in zip(pdf["id"], pdf["_t"]):
-                keys = _band_keys(text)
-                ids += [did] * len(keys)
-                buckets += keys
-            yield pd.DataFrame({"id": ids, "bucket": buckets})
-
-    return src.mapInPandas(kernel, schema=schema)
+    return src.mapInArrow(band_bucket_kernel, schema=schema)
 
 
 # "auto" edge mode: all-pairs below this many members, star above —
@@ -277,7 +319,7 @@ def cap_drop_metrics(
 def shingle_arrays_vectorized(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
-    """(id, sh) distinct word-n-gram shingle arrays via ONE Arrow batch
+    """(id, sh) distinct word-n-gram shingle arrays via ONE ``mapInArrow``
     kernel (a JVM lambda fold of the same n-grams interprets per
     element and dominated the jaccard-verify stage at 1 M+ docs): ASCII
     token class on lowercased text, space-joined n-grams,
@@ -291,15 +333,17 @@ def shingle_arrays_vectorized(
     schema = StructType([src.schema.fields[0]]).add(
         "sh", ArrayType(StringType())
     )
+    sh_type = pa.list_(pa.string())
 
-    def kernel(batches):
-        import pandas as pd
+    def shingle_kernel(batches):
+        for batch in batches:
+            texts = batch.column(1).to_pylist()
+            sh = [list(dict.fromkeys(ascii_shingles(t, n))) for t in texts]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), pa.array(sh, sh_type)], names=["id", "sh"]
+            )
 
-        for pdf in batches:
-            out = [list(dict.fromkeys(ascii_shingles(t, n))) for t in pdf["_t"]]
-            yield pd.DataFrame({"id": pdf["id"], "sh": out})
-
-    return src.mapInPandas(kernel, schema=schema)
+    return src.mapInArrow(shingle_kernel, schema=schema)
 
 
 def jaccard_verify(
@@ -313,15 +357,17 @@ def jaccard_verify(
     """Exact n-gram Jaccard on candidate pairs only — the scale path.
 
     Shingle arrays are computed ONLY for documents that appear in a
-    candidate pair (semi-join first): candidates are near-dup-bounded,
-    so the expensive tokenize+shingle fold runs over a tiny fraction of
-    the corpus instead of all of it — at 100 TB that is the difference
-    between a full second scan and a lookup. Then two linear joins
-    attach each side's (distinct) shingle array and one array_intersect
-    scores each pair; never quadratic in the corpus. Jaccard is
-    returned ×10000 as a bigint for engine-portable hashing. The
-    shingle arrays come from the Arrow kernel
-    :func:`shingle_arrays_vectorized`.
+    candidate pair: candidates are near-dup-bounded, so the tokenize +
+    shingle kernel runs over a fraction of the corpus instead of all of
+    it. The gate is not free: the documents are scanned again, and the
+    full ``[doc_id, text]`` rows shuffle to semi-join the candidate ids.
+    The kernel's ``(id, sh)`` output is hash-partitioned on ``id`` once;
+    both joins that attach a side's (distinct) shingle array read that
+    one exchange (the second is a reused exchange), so the kernel runs
+    once per document and the arrays shuffle once. One array_intersect
+    scores each pair; never quadratic in the corpus. Jaccard is returned
+    ×10000 as a bigint for engine-portable hashing. The shingle arrays
+    come from the Arrow kernel :func:`shingle_arrays_vectorized`.
     """
     cand_ids = (
         candidates.select(F.col("a").alias("cid"))
@@ -329,7 +375,7 @@ def jaccard_verify(
         .distinct()
     )
     gated = df.join(cand_ids, F.col(id_col) == F.col("cid"), "left_semi")
-    sh = shingle_arrays_vectorized(gated, id_col, text_col, n)
+    sh = shingle_arrays_vectorized(gated, id_col, text_col, n).repartition("id")
     pairs = (
         candidates.join(
             sh.select(F.col("id").alias("a"), F.col("sh").alias("sha")), "a"
@@ -389,17 +435,21 @@ def resolve_clusters(
     agnostic, so it reads the RAW pairs and skips the edge
     symmetrization/distinct shuffles entirely). Larger sets build the
     symmetric edge table and take the distributed doubling loop
-    unchanged — the 100 TB path. The count that makes the decision
-    runs on the already-checkpointed pairs, not the candidate
-    pipeline.
+    unchanged — the 100 TB path. The decision is one job on the
+    already-checkpointed pairs, not the candidate pipeline: it collects
+    at most limit + 1 pairs as Arrow, and more than the limit sends the
+    checkpointed table down the distributed loop, so the driver never
+    holds more than limit + 1 pairs.
     """
     spark = pairs.sparkSession
-    # materialized once: the local gate counts it, and every doubling
+    # materialized once: the local gate reads it, and every doubling
     # round otherwise re-runs the whole candidate+verify pipeline
     raw = pairs.select("a", "b").localCheckpoint(eager=True)
     local_limit = _local_pair_limit(spark)
-    if local_limit > 0 and raw.count() <= local_limit:
-        return _resolve_clusters_local(spark, raw)
+    if local_limit > 0:
+        head = raw.limit(local_limit + 1).toArrow()
+        if head.num_rows <= local_limit:
+            return _resolve_clusters_local(spark, head, raw.schema[0].dataType)
     edges = (
         raw.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .union(raw.select(F.col("b").alias("src"), F.col("a").alias("dst")))
@@ -464,16 +514,18 @@ def resolve_clusters(
 
 
 # Peak driver RSS per collected pair on the local path, JVM plus Python
-# (the collect, the Row objects, the union-find dict and the output
-# frame), measured with 24- and 48-char string ids: 1.75-1.9 KB/pair.
-_LOCAL_CC_PAIR_BYTES = 2048
+# (the checkpoint, the Arrow collect, the id lists, the union-find dict
+# and the output frame), measured with 24- and 48-char string ids at
+# 100k and 200k pairs: 1.5-1.6 KB/pair (24) and 2.2-2.5 KB/pair (48),
+# of which Python holds about 0.4 and 0.6 KB.
+_LOCAL_CC_PAIR_BYTES = 2560
 # share of spark.driver.memory the local path may spend on that
 _LOCAL_CC_MEMORY_SHARE = 0.5
 
 
 def _local_pair_limit(spark) -> int:
     """Most raw pairs resolve_clusters collects to the driver: 1g of
-    driver memory (Spark's default) admits 262 144 pairs. The size is
+    driver memory (Spark's default) admits 209 715 pairs. The size is
     read with Spark's own parser, so a bare number means MiB as it does
     for the JVM heap."""
     sc = spark.sparkContext
@@ -482,15 +534,14 @@ def _local_pair_limit(spark) -> int:
     return int(mib * 2**20 * _LOCAL_CC_MEMORY_SHARE) // _LOCAL_CC_PAIR_BYTES
 
 
-def _resolve_clusters_local(spark, edges: DataFrame) -> DataFrame:
+def _resolve_clusters_local(spark, pairs: pa.Table, id_type) -> DataFrame:
     """Driver-side min-id union-find over a SIZE-GATED pair collect
     (see resolve_clusters): every node labeled with its component's
     minimum id — exactly the fixpoint the doubling loop converges to
     (edge direction and duplicates are irrelevant to union-find).
-    Output schema matches the distributed branch (same id type)."""
+    Output schema matches the distributed branch (``id_type``)."""
     from pyspark.sql.types import StructField, StructType
 
-    rows = edges.collect()
     parent: dict = {}
 
     def find(x):
@@ -501,8 +552,7 @@ def _resolve_clusters_local(spark, edges: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for row in rows:
-        a, b = row[0], row[1]
+    for a, b in zip(pairs.column(0).to_pylist(), pairs.column(1).to_pylist()):
         if a not in parent:
             parent[a] = a
         if b not in parent:
@@ -513,14 +563,22 @@ def _resolve_clusters_local(spark, edges: DataFrame) -> DataFrame:
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    out = [(n, find(n)) for n in parent]
-    id_type = edges.schema[0].dataType
+    nodes = list(parent)
+    arrow_type = pairs.schema.field(0).type
+    out = pa.table(
+        {
+            "doc_id": pa.array(nodes, arrow_type),
+            "keeper": pa.array([find(x) for x in nodes], arrow_type),
+        }
+    )
     schema = StructType(
         [
             StructField("doc_id", id_type, True),
             StructField("keeper", id_type, True),
         ]
     )
+    # built from Arrow: from a list of tuples it goes through a pickled
+    # Python RDD, one more job
     return spark.createDataFrame(out, schema=schema)
 
 

@@ -1407,7 +1407,7 @@ def q_dedup_minhash_lsh(spark, sf_dir):
 
 def _minhash_sql(j):
     # hash j = 8-hex-char slice j%4 of md5(s || '#' || j//4): the spec
-    # of dedup._band_keys' digest slicing (4 hash values per md5)
+    # of dedup._fold_band_keys' digest slicing (4 hash values per md5)
     g, off = j // 4, 8 * (j % 4) + 1
     return f"list_min(list_transform(sh, s -> substr(md5(s || '#{g}'), {off}, 8)))"
 

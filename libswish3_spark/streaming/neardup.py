@@ -51,8 +51,9 @@ def stream_band_buckets(
 ) -> DataFrame:
     """docs stream (doc_id, spans) → exploded (id, bucket) rows.
 
-    Stateless per-row kernel (`doc_band_buckets`) — no watermark, no
-    state store; batch and stream inputs take the same plan.
+    Stateless Arrow batch kernel (`doc_band_buckets`; a row's buckets
+    depend on its own text alone) — no watermark, no state store; batch
+    and stream inputs take the same plan.
 
     The bucketed text MUST match what the index was built from:
 

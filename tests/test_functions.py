@@ -108,15 +108,15 @@ def test_resolve_clusters_integer_chain_converges(spark):
     assert got == {i: 0 for i in range(12)}
 
 
+STRING_ID_PAIRS = [("d2", "d5"), ("d5", "d1"), ("x9", "x3"), ("a", "é"), ("zz", "a")]
+
+
 def test_resolve_clusters_local_and_distributed_agree(spark, monkeypatch):
     """The size-gated driver union-find and the doubling loop must
     produce identical labels (string ids included: Spark compares
     UTF8 bytes, Python code points — identical order by UTF-8's
     order-preserving property)."""
-    pairs = spark.createDataFrame(
-        [("d2", "d5"), ("d5", "d1"), ("x9", "x3"), ("a", "é"), ("zz", "a")],
-        ["a", "b"],
-    )
+    pairs = spark.createDataFrame(STRING_ID_PAIRS, ["a", "b"])
     local = {r["doc_id"]: r["keeper"] for r in D.resolve_clusters(pairs).collect()}
     # a zero driver share forces the distributed doubling loop
     monkeypatch.setattr(D, "_LOCAL_CC_MEMORY_SHARE", 0)
@@ -124,6 +124,32 @@ def test_resolve_clusters_local_and_distributed_agree(spark, monkeypatch):
     assert local == dist
     assert local["d1"] == "d1" and local["d2"] == "d1" and local["d5"] == "d1"
     assert local["a"] == "a" and local["é"] == "a" and local["zz"] == "a"
+
+
+@pytest.mark.parametrize("local", [True, False], ids=["n_pairs", "n_plus_1_pairs"])
+def test_resolve_clusters_local_limit_boundary(spark, monkeypatch, local):
+    """With the driver limit at N pairs, N pairs resolve on the driver
+    and N + 1 take the distributed loop; the labels are the same."""
+    pairs = spark.createDataFrame(STRING_ID_PAIRS, ["a", "b"])
+    n = len(STRING_ID_PAIRS)
+    monkeypatch.setattr(D, "_local_pair_limit", lambda spark: n if local else n - 1)
+    collected = []
+    resolve_local = D._resolve_clusters_local
+
+    def spy(spark, head, id_type):
+        collected.append(head.num_rows)
+        return resolve_local(spark, head, id_type)
+
+    monkeypatch.setattr(D, "_resolve_clusters_local", spy)
+    out = D.resolve_clusters(pairs)
+    got = {r["doc_id"]: r["keeper"] for r in out.collect()}
+    assert collected == ([n] if local else [])
+    assert out.schema["doc_id"].dataType == pairs.schema["a"].dataType
+    assert got == {
+        "d1": "d1", "d2": "d1", "d5": "d1",
+        "x3": "x3", "x9": "x3",
+        "a": "a", "é": "a", "zz": "a",
+    }
 
 
 def test_simhash_identical_for_dups(spark, docs):

@@ -494,6 +494,68 @@ def test_minhash_bucket_index_matches_duckdb_spec(spark, edge):
     assert any(i == edge[-1][0] for i, _ in got)
 
 
+# one Arrow batch per case, in the order the kernel sees the rows:
+# sub-3-token documents first, last and in a row, null text, non-ASCII
+# text, repeated shingles, and a clone (shingles shared across rows)
+KERNEL_BATCHES = {
+    "mixed": [
+        ("s0", "two tokens"),
+        ("n1", None),
+        ("d2", "the quick brown fox jumps over the lazy dog"),
+        ("s3", ""),
+        ("s4", "one"),
+        ("s5", "a b"),
+        ("u6", "héllo wörld ünïcode stripped down to ascii runs only"),
+        ("r7", "a b c a b c a b c repeated shingles collapse"),
+        ("d8", "the quick brown fox jumps over the lazy dog"),
+        ("s9", "last two"),
+    ],
+    "no_shingles": [("z0", None), ("z1", "tiny doc"), ("z2", "")],
+    "empty": [],
+}
+
+
+@pytest.mark.parametrize("fold", [None, 4], ids=["one_fold", "fold_every_4"])
+@pytest.mark.parametrize("id_type", ["string", "int64"])
+@pytest.mark.parametrize("case", sorted(KERNEL_BATCHES))
+def test_band_bucket_batch_matches_duckdb_spec(case, id_type, fold, monkeypatch):
+    """The batch kernel behind doc_band_buckets, called on one Arrow
+    batch, emits exactly the (id, bucket) rows of
+    ORACLE_MINHASH_BUCKET_INDEX over the same rows, keeps the id type,
+    and emits no row for a document without a 3-gram shingle — also
+    when the batch holds no shingle at all, or no row, and when the
+    batch is min-folded in several runs of documents."""
+    import duckdb
+    import pyarrow as pa
+
+    from libswish3_spark.operators.queries import ORACLE_MINHASH_BUCKET_INDEX
+
+    if fold is not None:
+        monkeypatch.setattr(D, "_FOLD_SHINGLES", fold)
+    rows = KERNEL_BATCHES[case]
+    ids = [i if id_type == "string" else n for n, (i, _) in enumerate(rows)]
+    ids = pa.array(ids, pa.string() if id_type == "string" else pa.int64())
+    batch = pa.RecordBatch.from_arrays(
+        [ids, pa.array([t for _, t in rows], pa.string())], names=["id", "_t"]
+    )
+    out = D._band_bucket_batch(batch)
+    assert out.schema.names == ["id", "bucket"]
+    assert out.schema.field("id").type == ids.type
+    con = duckdb.connect()
+    con.register(
+        "documents",
+        pa.Table.from_batches([batch]).rename_columns(["doc_id", "text"]),
+    )
+    try:
+        want = con.execute(ORACLE_MINHASH_BUCKET_INDEX).fetchall()
+    finally:
+        con.close()
+    got = list(zip(out.column(0).to_pylist(), out.column(1).to_pylist()))
+    assert sorted(got) == sorted(want)
+    with_shingles = {"mixed": 4, "no_shingles": 0, "empty": 0}[case]
+    assert out.num_rows == with_shingles * D.MINHASH_BANDS
+
+
 def test_shingle_arrays_match_duckdb_spec(spark):
     """shingle_arrays_vectorized must emit the shingle SET of the
     oracles' _SHINGLE_SQL run in DuckDB (whose list_distinct does not
